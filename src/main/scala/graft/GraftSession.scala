@@ -96,6 +96,25 @@ object GraftSession {
       // shuffle+stage round wherever it fires (measured -270 ms across the
       // TPC-H join family at sf0.1, no regressions).
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+      // Fixed Tungsten page size. Spark derives it as execution memory /
+      // cores / 16, clamped to 1-64 MB — 64 MB on a 7g local[4] JVM — and a
+      // broadcast hash relation on a key that does not pack into one long
+      // (tpch_h05's (s_suppkey BIGINT, s_nationkey INT)) allocates one
+      // whole page as its first data page: 100 supplier rows held 64.0 MB,
+      // both in each executor's copy and in the driver copy a PlanCache
+      // entry keeps alive. A fixed 4 MB page sizes such relations near
+      // their data. Measured on 4 cores, -Xmx7g, interleaved:
+      //   - perfbench olap_mix, heap after GC (median of 3 seeds): 353.3 MB
+      //     derived, 241.6 MB at 4m, 227.2 MB at 1m; statement latencies
+      //     within run-to-run noise (llm_pipeline heap 81.5-82.4 MB at
+      //     every size);
+      //   - sf0.1 sort/aggregate-heavy shapes, median of 10 calls
+      //     (derived / 4m / 1m): agg_h01 0.381 / 0.342 / 0.339 s, tpch_h18
+      //     0.812 / 0.679 / 0.692 s, tpch_h21 0.641 / 0.595 / 0.591 s.
+      // 4m over 1m: a task addresses at most 8192 pages, so 1m would cap
+      // one task's in-memory sort or aggregation at 8 GB where 4m allows
+      // 32 GB, which keeps large executors safe for 14 MB less saving here.
+      .config("spark.buffer.pageSize", "4m")
       // Constraint propagation spends O(plan^2) optimizer time deriving
       // IsNotNull/transitive predicates on join-heavy plans (~20 ms/query on
       // the TPC-H shapes here, measured). The derived filters only prune

@@ -31,10 +31,12 @@ import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoin
   *     weakly so closed sessions collect.
   */
 object PlanCache {
-  // An executed plan can pin its broadcast relations (up to
-  // autoBroadcastJoinThreshold each) until evicted, so the bound is heap
-  // protection as much as plan bookkeeping; eviction drops the reference
-  // and the ContextCleaner reclaims the blocks.
+  // An executed plan pins its broadcast hash relations until evicted: each
+  // relation's data rounded up to whole pages, i.e. at least 1 MB for a
+  // single-long key and one spark.buffer.pageSize page (4 MB, GraftSession)
+  // for any other key. The bound is heap protection as much as plan
+  // bookkeeping; eviction drops the reference and the ContextCleaner
+  // reclaims the blocks.
   private val MaxEntries = 64
 
   private def newLru(): java.util.Map[String, DataFrame] =

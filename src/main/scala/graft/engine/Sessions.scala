@@ -171,6 +171,23 @@ final class SessionManager(root: SparkSession, global: GlobalSettings) {
     */
   val transactions = new Transactions
 
+  /** Route `session`'s reads through the current table manifest
+    * (cross-table commit visibility, [[ManifestCatalog]]) before it runs a
+    * statement — direct or prepared. A one-getAttr version check; views are
+    * re-registered and the plan cache invalidated only when a commit moved
+    * the manifest. Tables the session's own open transaction shadows are
+    * skipped: read-your-writes outranks the committed view.
+    */
+  def refreshManifest(session: SessionState): Unit = {
+    val shadowed = session.activeTxn.flatMap(transactions.lookup)
+      .map(t => t.staged.synchronized {
+        // staged keys are canonical (`db.t`); the manifest uses the bare
+        // spelling for default-db tables — translate before comparing
+        t.staged.asScala.keys.map(TableNames.manifestName).toSet
+      }).getOrElse(Set.empty[String])
+    ManifestCatalog.refresh(session.spark, shadowed): Unit
+  }
+
   def getOrCreate(sessionId: String, user: String, role: String,
       catalogAccess: Option[Set[String]] = None): SessionState = {
     if (killedTombstones.contains(sessionId))

@@ -329,20 +329,7 @@ object Statement {
       session: SessionState,
       global: GlobalSettings,
       sql: String): DataFrame = {
-    // Route this session's reads through the current table manifest
-    // (cross-table commit visibility, [[ManifestCatalog]]): a one-getAttr
-    // version check per statement; re-registers views and invalidates the
-    // plan cache only when a commit actually moved the manifest. Tables the
-    // session's own open transaction shadows are skipped — read-your-writes
-    // outranks the committed view.
-    ManifestCatalog.refresh(session.spark,
-      session.activeTxn.flatMap(id => sessions.transactions.lookup(id))
-        .map(t => t.staged.synchronized {
-          // staged keys are canonical (`db.t`); the manifest uses the bare
-          // spelling for default-db tables — translate before comparing
-          scala.jdk.CollectionConverters.MapHasAsScala(t.staged).asScala.keys
-            .map(TableNames.manifestName).toSet
-        }).getOrElse(Set.empty))
+    sessions.refreshManifest(session)
     // Log-catalog tables are appended continuously by the sink's writer,
     // OUTSIDE the SQL path, so nothing else drops this session's cached
     // file listing for them. Refresh before resolving — bounded to

@@ -573,10 +573,19 @@ object TextPipeline {
     * group exchange twice or re-shuffling the pair rows. Group state is the
     * O(k) member list (spillable via the sort-based aggregate fallback),
     * strictly dominated by the C(k,2) pair output any shape must emit.
+    *
+    * Preconditions:
+    *   - rows with a NULL in any group column are dropped first. The
+    *     self-join never pairs them (NULL = NULL is not true), while a
+    *     groupBy would gather them into one pairable group.
+    *   - one group's members are buffered in a SINGLE row (the sorted
+    *     array), so a group must fit in one row's memory; a hot key with
+    *     millions of members needs a pre-split before it reaches here.
     */
   private[operators] def groupedPairs(rows: DataFrame, groupCols: Seq[String],
       member: Column): DataFrame =
-    rows.groupBy(groupCols.map(col): _*)
+    rows.filter(groupCols.map(col(_).isNotNull).reduce(_ && _))
+      .groupBy(groupCols.map(col): _*)
       .agg(sort_array(collect_list(member)).as("ds"))
       .filter(size(col("ds")) >= 2)
       .select(col("ds"), posexplode(col("ds")))

@@ -645,6 +645,9 @@ final class GraftHttpServer(
       val wantJson =
         Option(ex.getRequestHeaders.getFirst("Accept")).exists(_.contains("application/json"))
       statementErrors {
+        // Same commit visibility as Statement.create: another session's
+        // COMMIT must reach a re-executed prepared SELECT.
+        sessions.refreshManifest(session)
         val df = session.executePrepared(handle, params)
         val bypass = session.isAdmin &&
           session.settings.get("gizmosql.bypass_queue").contains("true")

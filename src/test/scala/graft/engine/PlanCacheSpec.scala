@@ -221,6 +221,35 @@ class PlanCacheSpec extends AnyFunSuite {
     }
   }
 
+  test("a cached plan's multi-column broadcast pins pages near its data size") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val s = GraftSession.local().newSession()
+    graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
+    assert(s.table("supplier").count() <= 100, "build side must stay a tiny dimension")
+    // The tpch_h05 build: supplier keyed on (s_suppkey BIGINT, s_nationkey
+    // INT). 96 key bits cannot pack into one long, so the build is an
+    // UnsafeHashedRelation whose first page is spark.buffer.pageSize — left
+    // to Spark's memory/cores/16 derivation that is 64 MB per cached plan.
+    val df = PlanCache.sql(s,
+      "SELECT COUNT(*) AS c FROM customer JOIN supplier " +
+      "ON c_custkey = s_suppkey AND c_nationkey = s_nationkey")
+    df.collect()
+    def broadcasts(p: SparkPlan): Seq[BroadcastExchangeExec] = p match {
+      case a: AdaptiveSparkPlanExec => broadcasts(a.executedPlan)
+      case q: QueryStageExec => broadcasts(q.plan)
+      case b: BroadcastExchangeExec => b +: broadcasts(b.child)
+      case other => other.children.flatMap(broadcasts)
+    }
+    val sizes = broadcasts(df.queryExecution.executedPlan)
+      .flatMap(org.apache.spark.sql.execution.GraftHashedRelationShim.estimatedSize)
+    assert(sizes.size == 1, s"expected one broadcast hash relation, got $sizes in\n" +
+      df.queryExecution.executedPlan)
+    assert(sizes.head <= 8L * 1024 * 1024,
+      f"broadcast of <=100 rows pins ${sizes.head / 1048576.0}%.1f MB")
+  }
+
   test("static-plan probe never leaks into concurrent planning in the same session") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}

@@ -214,6 +214,26 @@ class OperatorSpec extends AnyFunSuite {
     assert(got.forall { case (a, b) => a < b })
   }
 
+  test("groupedPairs never pairs members whose group key is NULL") {
+    // The reference self-join's x.grp = y.grp is never true for NULL, so
+    // NULL-keyed rows must not form a group (a bare groupBy would pair them).
+    import spark.implicits._
+    val rows = Seq[(Option[String], Option[Int], Long)](
+      (Some("g1"), Some(1), 1L), (Some("g1"), Some(1), 2L),
+      (None, Some(1), 3L), (None, Some(1), 4L), (None, Some(1), 5L),
+      (Some("g2"), None, 6L), (Some("g2"), None, 7L),
+      (Some("g3"), Some(2), 8L)).toDF("grp", "band", "m")
+    val got = TextPipeline.groupedPairs(rows, Seq("grp", "band"), col("m"))
+      .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val ref = rows.as("x").join(rows.as("y"),
+        col("x.grp") === col("y.grp") && col("x.band") === col("y.band") &&
+          col("x.m") < col("y.m"))
+      .select(col("x.m").as("a"), col("y.m").as("b"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(ref == Seq((1L, 2L)))
+    assert(got == ref, s"got $got, reference $ref")
+  }
+
   test("banded pair generation equals the reference bucket self-join exactly") {
     // r18: bandPairs generates within-bucket pairs from a sorted
     // collect_list via chained generators instead of a bucket self-join.

@@ -194,6 +194,36 @@ class HttpServerSpec extends AnyFunSuite {
       "X-Graft-Handle" -> handle).statusCode() == 400)
   }
 
+  test("a re-executed prepared SELECT sees another session's committed transaction") {
+    val writer = tokenOf(post("/auth", "", "Authorization" -> basic("gizmosql_username", password)))
+    val readerId = Auth.validate(secret, token, "graft-instance").toOption.get.sessionId
+    assert(Auth.validate(secret, writer, "graft-instance").toOption.get.sessionId != readerId,
+      "each login must get its own session")
+    def sql(tok: String, s: String): String = {
+      val r = post("/sql", s, "Authorization" -> s"Bearer $tok", "Accept" -> "application/json")
+      assert(r.statusCode() == 200, s"$s -> ${r.statusCode()}")
+      new String(r.body(), StandardCharsets.UTF_8)
+    }
+    sql(writer, "DROP TABLE IF EXISTS wire_prep_vis")
+    sql(writer, "CREATE TABLE wire_prep_vis USING parquet AS SELECT id, id * 10 AS v FROM range(3)")
+    val prep = post("/prepare", "SELECT CAST(SUM(v) AS BIGINT) AS s FROM wire_prep_vis",
+      "Authorization" -> s"Bearer $token")
+    assert(prep.statusCode() == 200)
+    val handle = new String(prep.body(), StandardCharsets.UTF_8)
+      .split("\"handle\":\"")(1).split("\"")(0)
+    def execute(): String = {
+      val r = post("/execute", "", "Authorization" -> s"Bearer $token",
+        "X-Graft-Handle" -> handle, "Accept" -> "application/json")
+      new String(r.body(), StandardCharsets.UTF_8)
+    }
+    assert(execute() == """[{"s":30}]""")
+    sql(writer, "BEGIN")
+    sql(writer, "UPDATE wire_prep_vis SET v = v + 1")
+    assert(execute() == """[{"s":30}]""", "uncommitted writes must stay invisible")
+    sql(writer, "COMMIT")
+    assert(execute() == """[{"s":33}]""")
+  }
+
   test("bulk ingest over the wire: create, then append doubles the rows") {
     val payload = ArrowIO.toArrowStream(
       spark.sql("SELECT r_regionkey AS k, r_name AS name FROM region"))
