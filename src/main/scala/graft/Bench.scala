@@ -243,8 +243,9 @@ object Bench {
     // the line and the round lost its bench artifact. bench_last.json is the
     // canonical slot tools/bench_pair.sh keys on; the cpus-suffixed copy
     // stops a lower-core rerun from clobbering the 32-core medians (r17: the
-    // c8 run overwrote the only copy of the 32-core per-query numbers).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // c8 run overwrote the only copy of the 32-core per-query numbers). The
+    // suffix is the parallelism the run actually had, whatever set it.
+    val cpus = spark.sparkContext.defaultParallelism
     for (path <- Seq("tools/bench_last.json", s"tools/bench_last_c$cpus.json"))
       try java.nio.file.Files.write(java.nio.file.Paths.get(path),
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

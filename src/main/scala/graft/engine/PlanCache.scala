@@ -1,7 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult, LogicalPlan}
+import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
@@ -29,6 +30,17 @@ import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoin
   *     literals) call [[invalidate]] explicitly.
   *   - Keys are per SparkSession (sessions are isolated `newSession`s), held
   *     weakly so closed sessions collect.
+  *   - A query whose analyzed tree holds a non-deterministic expression
+  *     (`rand()`, `uuid()`) or a current time/date (`current_timestamp()`,
+  *     `now()`) is never stored: the stored plan would carry the first
+  *     call's seed or folded time ([[storable]]).
+  *   - Prepared executes ([[prepared]]) memoize, per (session, stored SQL,
+  *     typed parameter values), the optimized plan, the static-pin decision
+  *     and the partition override — never a dataset or executed plan, so
+  *     no shuffle output or broadcast relation is pinned between calls.
+  *     Every call plans physically and executes in full. [[invalidate]]
+  *     clears this memo with the rest, so every invalidation above covers
+  *     it.
   */
 object PlanCache {
   // An executed plan pins its broadcast hash relations until evicted: each
@@ -39,16 +51,18 @@ object PlanCache {
   // reclaims the blocks.
   private val MaxEntries = 64
 
-  private def newLru(): java.util.Map[String, DataFrame] =
+  private def newLru[K, V](): java.util.Map[K, V] =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, DataFrame](64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]): Boolean =
+      new java.util.LinkedHashMap[K, V](64, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
           size() > MaxEntries
       })
 
   // Weak identity keys, same rationale as Tables.registered.
-  private val bySession = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.Map[String, DataFrame]]())
+  private def bySessionMap[V](): java.util.Map[SparkSession, V] =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, V]())
+
+  private val bySession = bySessionMap[java.util.Map[String, DataFrame]]()
 
   // Adaptive-off clone for the static-plan probe in [[prepare]] and the
   // static branch of [[count]]. Probing under a clone (copied conf, shared
@@ -99,11 +113,7 @@ object PlanCache {
     }
 
   private def store(spark: SparkSession): java.util.Map[String, DataFrame] =
-    bySession.synchronized {
-      var m = bySession.get(spark)
-      if (m == null) { m = newLru(); bySession.put(spark, m) }
-      m
-    }
+    bySession.computeIfAbsent(spark, _ => newLru())
 
   /** Reuse the DataFrame prepared for `key` in this session, or build it.
     * The caller vouches that `build` is pure (no eager side effects) —
@@ -394,18 +404,11 @@ object PlanCache {
     }
   }
 
-  private val countBySession = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.Map[String, CountPlan]]())
+  private val countBySession = bySessionMap[java.util.Map[String, CountPlan]]()
 
   private def countStore(spark: SparkSession): java.util.Map[String, CountPlan] =
-    countBySession.synchronized {
-      var m = countBySession.get(spark)
-      if (m == null) {
-        m = java.util.Collections.synchronizedMap(new java.util.HashMap[String, CountPlan]())
-        countBySession.put(spark, m)
-      }
-      m
-    }
+    countBySession.computeIfAbsent(spark, _ =>
+      java.util.Collections.synchronizedMap(new java.util.HashMap[String, CountPlan]()))
 
   /** Execute COUNT(*) over the plan cached at `key` — the repeated-action
     * path a server's prepared statements and the bench both take.
@@ -467,22 +470,9 @@ object PlanCache {
     if (hit != null) hit
     else {
       val df = spark.sql(text)
-      val isCommand = df.queryExecution.analyzed.collectFirst {
-        case c: Command => c
-        case r: CommandResult => r
-      }.isDefined
-      // A log-catalog table is appended CONTINUOUSLY by the catalog log
-      // sink outside the SQL path — a cached optimized plan would pin its
-      // pruned file listing forever. Serve those uncached (volatile-table
-      // rule; nothing else invalidates on the sink's behalf).
-      val touchesLogCatalog = CatalogLogSink.activeCatalogs.nonEmpty &&
-        df.queryExecution.analyzed.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.LogicalRelation
-              if r.catalogTable.exists(t =>
-                CatalogLogSink.isLogCatalog(t.identifier.database.getOrElse(""))) => r
-        }.isDefined
-      if (isCommand) { invalidate(spark); df }
-      else if (touchesLogCatalog) df
+      val analyzed = df.queryExecution.analyzed
+      if (isCommand(analyzed)) { invalidate(spark); df }
+      else if (!storable(analyzed)) df
       else {
         val prepared = prepare(spark, df)
         m.put(text, prepared)
@@ -491,9 +481,94 @@ object PlanCache {
     }
   }
 
+  private def isCommand(analyzed: LogicalPlan): Boolean =
+    analyzed.collectFirst {
+      case c: Command => c
+      case r: CommandResult => r
+    }.isDefined
+
+  /** Whether a pure query's plan may be kept and re-run. Two kinds must be
+    * planned per call instead:
+    *   - A plan reading a log-catalog table: the catalog log sink appends
+    *     to those CONTINUOUSLY, outside the SQL path — a stored optimized
+    *     plan would pin its pruned file listing forever (volatile-table
+    *     rule; nothing else invalidates on the sink's behalf).
+    *   - A plan whose analyzed tree (subqueries included) holds a
+    *     non-deterministic expression or a current time/date: analysis
+    *     fixes the seed of `rand()`/`uuid()` and optimization folds
+    *     `current_timestamp()`/`now()` to a literal, so a stored plan would
+    *     answer every later call with the first call's values.
+    */
+  private def storable(analyzed: LogicalPlan): Boolean = {
+    val touchesLogCatalog = CatalogLogSink.activeCatalogs.nonEmpty &&
+      analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation
+            if r.catalogTable.exists(t =>
+              CatalogLogSink.isLogCatalog(t.identifier.database.getOrElse(""))) => r
+      }.isDefined
+    val perCall = analyzed.collectWithSubqueries { case p => p }.exists(_.expressions.exists(
+      _.exists(e => !e.deterministic || e.containsPattern(TreePattern.CURRENT_LIKE))))
+    !touchesLogCatalog && !perCall
+  }
+
+  // ---- prepared executes --------------------------------------------------
+
+  private case class PreparedPlan(optimized: LogicalPlan, static: Boolean, parts: Int)
+
+  // (stored SQL, parameters as (name, value class, value) sorted by name):
+  // the class keeps x=1, x=1.0 and x='1' apart — Scala's == calls 1L and
+  // 1.0 equal, and each binds to a different literal type.
+  private type PreparedKey = (String, Seq[(String, String, Any)])
+
+  private val preparedBySession = bySessionMap[java.util.Map[PreparedKey, PreparedPlan]]()
+
+  /** One call of a prepared, non-command statement with bound `params`.
+    *
+    * The first call with a given (stored SQL, typed parameter values) in
+    * this session runs `build` (parse, analysis with the parameters bound,
+    * optimization), probes the optimized plan for the static pin exactly as
+    * [[sql]] does, and memoizes (optimized plan, pin decision, partition
+    * override). Later calls skip all of that: each roots a NEW dataset over
+    * the memoized optimized plan — on the adaptive-off clone when pinned, on
+    * the live session otherwise — so it plans physically and executes in
+    * full. Only logical plans are kept: no executed plan, shuffle output or
+    * broadcast relation outlives its call. Bounded like the statement cache
+    * (LRU, `MaxEntries` per session) and cleared with it by
+    * [[invalidate]].
+    *
+    * Never memoized: commands (which also invalidate, as in [[sql]]) and
+    * plans that are not [[storable]]. The caller keeps transaction-local
+    * resolution out: a session with staged transaction tables does not
+    * come here.
+    */
+  def prepared(spark: SparkSession, sql: String, params: Map[String, Any])(
+      build: => DataFrame): DataFrame = {
+    val key: PreparedKey = (sql, params.toSeq.sortBy(_._1).map { case (k, v) =>
+      (k, if (v == null) "null" else v.getClass.getName, v)
+    })
+    val m = preparedBySession.computeIfAbsent(spark, _ => newLru())
+    val hit = m.get(key)
+    if (hit != null) {
+      val on = if (hit.static) probeSession(spark, hit.parts) else spark
+      org.apache.spark.sql.GraftDatasetShim.ofRowsPreOptimized(on, hit.optimized)
+    } else {
+      val df = build
+      val analyzed = df.queryExecution.analyzed
+      if (isCommand(analyzed)) { invalidate(spark); df }
+      else if (!storable(analyzed)) df
+      else {
+        val optimized = df.queryExecution.optimizedPlan
+        val (probed, static, parts) = prepareOptimized(spark, optimized)
+        m.put(key, PreparedPlan(optimized, static, parts))
+        probed
+      }
+    }
+  }
+
   def invalidate(spark: SparkSession): Unit = {
     bySession.remove(spark)
     countBySession.remove(spark)
+    preparedBySession.remove(spark)
     ()
   }
 }

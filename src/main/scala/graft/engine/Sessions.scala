@@ -18,6 +18,8 @@ final class SessionState(
     val role: String,
     val spark: SparkSession,
     val settings: SessionSettings,
+    // the registry `activeTxn` handles resolve in (SessionManager's)
+    transactions: Transactions,
     // None = unrestricted; Some(set) = catalog_access claim from the token.
     val catalogAccess: Option[Set[String]] = None) {
 
@@ -30,6 +32,14 @@ final class SessionState(
   @volatile var killRequested: Boolean = false
   /** Open SQL-path transaction handle, if any (BEGIN ... COMMIT/ROLLBACK). */
   @volatile var activeTxn: Option[String] = None
+
+  /** Canonical names (`db.t`) of the tables this session's open transaction
+    * has staged writes for; empty outside a transaction.
+    */
+  def stagedTables: Set[String] =
+    activeTxn.flatMap(transactions.lookup)
+      .map(t => t.staged.synchronized(t.staged.asScala.keys.toSet))
+      .getOrElse(Set.empty)
 
   /** Job-group tag for everything this session runs — the cancellation hook. */
   def jobGroup: String = s"graft-session-$id"
@@ -83,12 +93,16 @@ final class SessionState(
 
   /** Prepared DML executes eagerly inside spark.sql — a mutation outside
     * PlanCache.sql, so it must invalidate explicitly (the PlanCache
-    * contract; same rule as COPY FROM / RowDml).
+    * contract; same rule as COPY FROM / RowDml). Other statements reuse
+    * their optimized plan and static pin per parameter values
+    * ([[PlanCache.prepared]]), except while this session's transaction has
+    * staged tables — the rule `Statement.create` applies to direct SQL.
     */
   private def runPrepared(p: Prepared, params: Map[String, Any]) = {
-    val df = if (params.isEmpty) spark.sql(p.sql) else spark.sql(p.sql, params)
-    if (p.isCommand) PlanCache.invalidate(spark)
-    df
+    def run = if (params.isEmpty) spark.sql(p.sql) else spark.sql(p.sql, params)
+    if (p.isCommand) { val df = run; PlanCache.invalidate(spark); df }
+    else if (stagedTables.nonEmpty) run
+    else PlanCache.prepared(spark, p.sql, params)(run)
   }
 
   def lookupPrepared(handle: String): Option[Prepared] = Option(prepared.get(handle))
@@ -178,15 +192,11 @@ final class SessionManager(root: SparkSession, global: GlobalSettings) {
     * the manifest. Tables the session's own open transaction shadows are
     * skipped: read-your-writes outranks the committed view.
     */
-  def refreshManifest(session: SessionState): Unit = {
-    val shadowed = session.activeTxn.flatMap(transactions.lookup)
-      .map(t => t.staged.synchronized {
-        // staged keys are canonical (`db.t`); the manifest uses the bare
-        // spelling for default-db tables — translate before comparing
-        t.staged.asScala.keys.map(TableNames.manifestName).toSet
-      }).getOrElse(Set.empty[String])
-    ManifestCatalog.refresh(session.spark, shadowed): Unit
-  }
+  def refreshManifest(session: SessionState): Unit =
+    // staged keys are canonical (`db.t`); the manifest uses the bare
+    // spelling for default-db tables — translate before comparing
+    ManifestCatalog.refresh(session.spark,
+      session.stagedTables.map(TableNames.manifestName)): Unit
 
   def getOrCreate(sessionId: String, user: String, role: String,
       catalogAccess: Option[Set[String]] = None): SessionState = {
@@ -194,7 +204,7 @@ final class SessionManager(root: SparkSession, global: GlobalSettings) {
       throw new IllegalStateException(s"session $sessionId was killed")
     val s = sessions.computeIfAbsent(sessionId, _ =>
       new SessionState(sessionId, user, role, root.newSession(),
-        new SessionSettings(global), catalogAccess))
+        new SessionSettings(global), transactions, catalogAccess))
     s.serverReadOnly = readOnlyMode
     s
   }

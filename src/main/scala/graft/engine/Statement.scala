@@ -953,12 +953,8 @@ object Statement {
             // remaps every spelling of a staged relation to the txn's
             // shadow view before execution (PlanCache skipped — txn-local
             // resolution must not be cached).
-            val stagedShadows: Map[String, String] = session.activeTxn
-              .flatMap(id => sessions.transactions.lookup(id))
-              .map(t => t.staged.synchronized {
-                scala.jdk.CollectionConverters.MapHasAsScala(t.staged).asScala.keys
-                  .map(n => n -> TxnDml.shadowName(n)).toMap
-              }).getOrElse(Map.empty)
+            val stagedShadows: Map[String, String] =
+              session.stagedTables.map(n => n -> TxnDml.shadowName(n)).toMap
             insertTarget match {
               case Some(t) =>
                 sessions.attachments.assertWritableTarget(t,
@@ -1006,8 +1002,9 @@ object Statement {
     * BOUNDED RESULTS ONLY: this materializes the full result on the driver
     * via `collect()` — it exists for the CLI/tests/demo. The serving path
     * streams batches without driver materialization
-    * ([[graft.server.GraftHttpServer]] + `ArrowIO.write` over
-    * `toLocalIterator`); never put this method on a wire path.
+    * ([[graft.server.GraftHttpServer]] + `ArrowIO.writeArrowStream`, one
+    * job per window of result partitions); never put this method on a wire
+    * path.
     */
   def run(
       sessions: SessionManager,

@@ -31,12 +31,13 @@ import scala.language.implicitConversions
   *  - POST /close    close the caller's session
   *
   * Result bodies stream: both the Arrow and the JSON encodings write chunked
-  * through `toLocalIterator`, so a SELECT larger than driver memory never
-  * materializes on the driver (one batch resident at a time). With `tls`
-  * set, the same endpoints serve HTTPS via the JDK's `HttpsServer` — the
-  * reference's TLS listener (`gizmosql_library.cpp:497-560`, cert/key
-  * material under `tls/`); a plaintext client against a TLS port is refused
-  * at the handshake.
+  * from one Spark job per window of at most `defaultParallelism` result
+  * partitions (`GraftDatasetShim.withResultRows`), so a SELECT larger than
+  * driver memory never materializes on the driver (one window resident at a
+  * time). With `tls` set, the same endpoints serve HTTPS via the JDK's
+  * `HttpsServer` — the reference's TLS listener
+  * (`gizmosql_library.cpp:497-560`, cert/key material under `tls/`); a
+  * plaintext client against a TLS port is refused at the handshake.
   */
 final class GraftHttpServer(
     spark: SparkSession,
@@ -384,8 +385,10 @@ final class GraftHttpServer(
       }
     }
 
-  /** Stream a result DataFrame chunked (Arrow IPC or a JSON row array)
-    * through `toLocalIterator` — no full materialization on the driver. Runs
+  /** Stream a result DataFrame chunked (Arrow IPC or a JSON row array), one
+    * Spark job per window of result partitions — no full materialization on
+    * the driver. Both encodings fetch through the same windowed helper over
+    * the dataset's existing executed plan. Runs
     * inside the admission slot and the query-timeout worker, so a timeout or
     * kill interrupts the producing jobs mid-stream (the reference's
     * cancel-during-DoGet semantics).
@@ -407,12 +410,10 @@ final class GraftHttpServer(
       val w = new java.io.OutputStreamWriter(new java.io.BufferedOutputStream(os, 64 * 1024),
         StandardCharsets.UTF_8)
       w.write("[")
-      val it = df.toJSON.toLocalIterator()
-      var first = true
-      while (it.hasNext) {
-        if (!first) w.write(",")
-        w.write(it.next()); first = false; rows += 1
-      }
+      org.apache.spark.sql.GraftDatasetShim.withResultJson(df)(_.foreach { json =>
+        if (rows > 0) w.write(",")
+        w.write(json); rows += 1
+      })
       w.write("]")
       w.flush()
     } else rows = ArrowIO.writeArrowStream(df, os)

@@ -5,7 +5,7 @@ import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.complex.{ListVector, MapVector, StructVector}
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftDatasetShim, Row, SparkSession}
 import org.apache.spark.sql.types._
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import scala.jdk.CollectionConverters._
@@ -16,8 +16,10 @@ import scala.jdk.CollectionConverters._
   * this environment the transport stops at IPC stream bytes; a Flight SQL
   * endpoint would wrap these calls 1:1.
   *
-  * Batched via `toLocalIterator` so only `batchSize` rows are resident on the
-  * driver at a time — the executors stream partitions sequentially.
+  * Results come from `GraftDatasetShim.withResultRows`: one Spark job per
+  * window of at most `defaultParallelism` result partitions, in partition
+  * order, so the driver holds one window of rows (as UnsafeRow bytes) plus
+  * the `batchSize` rows being encoded.
   *
   * Value coverage: all atomic types, arrays of atomics, structs of atomics,
   * and maps with atomic keys/values (schema mapping in
@@ -32,10 +34,6 @@ object ArrowIO {
     out.toByteArray
   }
 
-  /** Stream a DataFrame as an Arrow IPC stream directly onto `out` — the
-    * transport path for results larger than driver memory: only one
-    * `batchSize` batch is resident at a time, written as it fills.
-    */
   /** Output columns whose defining expression produces WKB geometry — a
     * StaticInvoke into the [[graft.plans.Wkb]] kernel returning BINARY.
     * Export auto-tags these with `ARROW:extension:name = geoarrow.wkb`, the
@@ -62,7 +60,12 @@ object ArrowIO {
     plan.output.filter(at => geomIds.contains(at.exprId)).map(_.name).toSet
   } catch { case scala.util.control.NonFatal(_) => Set.empty }
 
-  /** Returns the number of rows streamed (instrumentation's rows_fetched). */
+  /** Stream a DataFrame as an Arrow IPC stream directly onto `out` — the
+    * transport path for results larger than driver memory: one fetch window
+    * and one `batchSize` batch are resident at a time, each batch written as
+    * it fills. Returns the number of rows streamed (instrumentation's
+    * rows_fetched).
+    */
   def writeArrowStream(df: DataFrame, out: java.io.OutputStream, batchSize: Int = 4096): Long = {
     val schema = df.schema
     val arrowSchema = TypeMapping.toArrowSchema(schema, geometryOutputs(df))
@@ -72,21 +75,22 @@ object ArrowIO {
     var total = 0L
     try {
       writer.start()
-      val it = df.toLocalIterator()
-      val buffer = new scala.collection.mutable.ArrayBuffer[Row](batchSize)
-      def flush(): Unit = if (buffer.nonEmpty) {
-        root.allocateNew()
-        buffer.zipWithIndex.foreach { case (row, i) => writeRow(root, schema, row, i) }
-        root.setRowCount(buffer.size)
-        writer.writeBatch()
-        total += buffer.size
-        buffer.clear()
+      GraftDatasetShim.withResultRows(df) { it =>
+        val buffer = new scala.collection.mutable.ArrayBuffer[Row](batchSize)
+        def flush(): Unit = if (buffer.nonEmpty) {
+          root.allocateNew()
+          buffer.zipWithIndex.foreach { case (row, i) => writeRow(root, schema, row, i) }
+          root.setRowCount(buffer.size)
+          writer.writeBatch()
+          total += buffer.size
+          buffer.clear()
+        }
+        while (it.hasNext) {
+          buffer += it.next()
+          if (buffer.size >= batchSize) flush()
+        }
+        flush()
       }
-      while (it.hasNext) {
-        buffer += it.next()
-        if (buffer.size >= batchSize) flush()
-      }
-      flush()
       writer.end()
       total
     } finally {

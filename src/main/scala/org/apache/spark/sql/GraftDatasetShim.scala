@@ -64,4 +64,101 @@ object GraftDatasetShim {
     * the bounded listener queue dropped the event under load.
     */
   def observedOrEmpty(obs: Observation): Map[String, Any] = obs.getOrEmpty
+
+  /** Hand `f` the rows of `df` in partition order, fetched from the
+    * dataset's EXISTING executed plan (a cached statement keeps its finished
+    * stages) by one Spark job per window of at most `defaultParallelism`
+    * result partitions. `toLocalIterator` runs one job per partition, in
+    * sequence; `collect` one job for all of them, resident at once. Here the
+    * driver holds one window's rows, each row as its UnsafeRow bytes; a
+    * result the plan bounds to `MaxCollectRows` rows is collected whole. The
+    * fetch is one SQL execution (listeners and the UI see it like a
+    * `collect`) and its jobs carry the calling thread's job group, so
+    * cancelling the group stops it.
+    */
+  def withResultRows[A](df: DataFrame)(f: Iterator[Row] => A): A = {
+    val fromRow = df.asInstanceOf[classic.Dataset[Row]].exprEnc.resolveAndBind().createDeserializer()
+    val toUnsafe = UnsafeBytes.encoder(df.schema)
+    val numFields = df.schema.length
+    withResultWindows(df)(toUnsafe)(windows =>
+      f(windows.flatMap(UnsafeBytes.decode(_, numFields)).map(fromRow)))
+  }
+
+  /** [[withResultRows]] with each row as the JSON object `Dataset.toJSON`
+    * writes, encoded on the executors.
+    */
+  def withResultJson[A](df: DataFrame)(f: Iterator[String] => A): A = {
+    val schema = df.schema
+    val tz = df.sparkSession.sessionState.conf.sessionLocalTimeZone
+    val toJson = (rows: Iterator[catalyst.InternalRow]) => {
+      val writer = new java.io.CharArrayWriter()
+      val gen = new catalyst.json.JacksonGenerator(schema, writer,
+        new catalyst.json.JSONOptions(Map.empty[String, String], tz))
+      val out = Array.newBuilder[String]
+      rows.foreach { r => gen.write(r); gen.flush(); out += writer.toString; writer.reset() }
+      gen.close()
+      out.result()
+    }
+    withResultWindows(df)(toJson)(windows => f(windows.flatMap(_.iterator)))
+  }
+
+  private val MaxCollectRows = 10000L
+
+  private def withResultWindows[U: scala.reflect.ClassTag, A](df: DataFrame)(
+      encode: Iterator[catalyst.InternalRow] => U)(f: Iterator[U] => A): A = {
+    val qe = df.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      val plan = qe.executedPlan
+      plan.resetMetrics()
+      // A result the plan bounds to a few rows (LIMIT, global aggregates,
+      // small local relations) takes the plan's own collect: for ORDER BY
+      // ... LIMIT that merges the per-partition top rows on the driver
+      // instead of shuffling them to one partition first.
+      if (qe.optimizedPlan.maxRows.exists(_ <= MaxCollectRows))
+        f(Iterator.single(encode(plan.executeCollect().iterator)))
+      else {
+        val rdd = plan.execute()
+        val sc = rdd.sparkContext
+        val n = rdd.getNumPartitions
+        val window = math.max(1, sc.defaultParallelism)
+        // lazy: window k+1 runs when the caller has consumed window k
+        f(Iterator.range(0, n, window).flatMap(start =>
+          sc.runJob(rdd, encode, start until math.min(n, start + window))))
+      }
+    }
+  }
+
+  /** Rows framed as (size, UnsafeRow bytes), -1-terminated: how a result
+    * partition travels from an executor to the driver.
+    */
+  private object UnsafeBytes {
+    import catalyst.expressions.{UnsafeProjection, UnsafeRow}
+
+    def encoder(schema: types.StructType): Iterator[catalyst.InternalRow] => Array[Byte] =
+      rows => {
+        val bytes = new java.io.ByteArrayOutputStream()
+        val out = new java.io.DataOutputStream(bytes)
+        val buffer = new Array[Byte](4096)
+        lazy val toUnsafe = UnsafeProjection.create(schema)
+        rows.foreach { r =>
+          val u = r match { case u: UnsafeRow => u; case o => toUnsafe(o) }
+          out.writeInt(u.getSizeInBytes)
+          u.writeToStream(out, buffer)
+        }
+        out.writeInt(-1)
+        out.flush()
+        bytes.toByteArray
+      }
+
+    def decode(bytes: Array[Byte], numFields: Int): Iterator[UnsafeRow] = {
+      val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+      Iterator.continually(in.readInt()).takeWhile(_ >= 0).map { size =>
+        val b = new Array[Byte](size)
+        in.readFully(b)
+        val row = new UnsafeRow(numFields)
+        row.pointTo(b, size)
+        row
+      }
+    }
+  }
 }

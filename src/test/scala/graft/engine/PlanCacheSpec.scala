@@ -337,4 +337,139 @@ class PlanCacheSpec extends AnyFunSuite {
     val (v3, _) = measured(PlanCache.count(s, "cnt:test")(s.sql(q)))
     assert(v3 == expected)
   }
+
+  test("the statement cache never freezes current_timestamp(), rand() or uuid()") {
+    val s = spark.newSession()
+    val q = "SELECT current_timestamp() AS t, rand() AS r, uuid() AS u"
+    val a = PlanCache.sql(s, q).collect().head
+    Thread.sleep(1100)
+    val b = PlanCache.sql(s, q).collect().head
+    assert(a.get(0) != b.get(0), s"current_timestamp() frozen at ${a.get(0)}")
+    assert(a.getDouble(1) != b.getDouble(1), "rand() replayed its first seed")
+    assert(a.getString(2) != b.getString(2), "uuid() replayed its first seed")
+    // inside a subquery too
+    val sub = "SELECT (SELECT uuid()) AS u"
+    assert(PlanCache.sql(s, sub).collect().head != PlanCache.sql(s, sub).collect().head)
+    // deterministic texts keep their cache entry
+    val pure = "SELECT 7 * 6 AS v"
+    assert(PlanCache.sql(s, pure) eq PlanCache.sql(s, pure))
+  }
+
+  test("a cached static-pinned ORDER BY result is fetched in one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val s = GraftSession.local().newSession()
+    graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
+    val df = PlanCache.sql(s, "SELECT n_nationkey, n_name FROM nation ORDER BY n_name")
+    val plan = df.queryExecution.executedPlan
+    assert(!plan.isInstanceOf[AdaptiveSparkPlanExec], s"expected a static pin:\n$plan")
+    val partitions = plan.execute().getNumPartitions
+    assert(partitions > 1, "the result must span several partitions")
+    val group = s"fetch-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    def fetchJobs(): (Seq[String], Int) = {
+      jobs.set(0)
+      s.sparkContext.addSparkListener(listener)
+      s.sparkContext.setJobGroup(group, "fetch")
+      val bytes =
+        try {
+          val out = graft.sources.ArrowIO.toArrowStream(df)
+          var last = -1
+          var same = 0
+          while (same < 3) { // listener events are async: 3 quiet polls
+            Thread.sleep(100)
+            val now = jobs.get
+            if (now == last) same += 1 else { same = 0; last = now }
+          }
+          out
+        } finally {
+          s.sparkContext.clearJobGroup()
+          s.sparkContext.removeSparkListener(listener)
+        }
+      (graft.sources.ArrowIO.fromArrowStream(s, bytes).collect().map(_.getString(1)).toSeq, jobs.get)
+    }
+    val (first, _) = fetchJobs()
+    assert(first == first.sorted && first.size == 25)
+    // The cached hit re-runs only the result stage: one job for every
+    // partition (toLocalIterator ran one per partition).
+    val (again, n) = fetchJobs()
+    assert(again == first)
+    assert(n == 1, s"fetching $partitions result partitions took $n jobs")
+  }
+
+  // ---- prepared executes ---------------------------------------------------
+
+  private lazy val global = new GlobalSettings
+  private lazy val sessions = new SessionManager(spark, global)
+
+  private def shared(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+    a.queryExecution.optimizedPlan eq b.queryExecution.optimizedPlan
+
+  test("a re-executed prepared SELECT reuses its optimized plan and sees same-session inserts") {
+    val s = sessions.getOrCreate("pc-prep-insert", "alice", "admin")
+    def run(sql: String) = Statement.create(sessions, s, global, sql).collect()
+    run("DROP TABLE IF EXISTS pc_prep_ins")
+    run("CREATE TABLE pc_prep_ins USING parquet AS SELECT 1 AS id")
+    val h = s.prepare("SELECT COUNT(*) AS c FROM pc_prep_ins WHERE id >= :lo").handle
+    def count() = s.executePrepared(h, Map("lo" -> 0L))
+    val a = count()
+    val b = count()
+    assert(shared(a, b), "the second call must reuse the memoized optimized plan")
+    assert(!(a eq b), "every call roots a new dataset")
+    assert(b.collect().head.getLong(0) == 1)
+    run("INSERT INTO pc_prep_ins VALUES (2)")
+    assert(count().collect().head.getLong(0) == 2)
+    // a prepared INSERT invalidates as well
+    val ins = s.prepare("INSERT INTO pc_prep_ins VALUES (:v)").handle
+    s.executePrepared(ins, Map("v" -> 3))
+    assert(count().collect().head.getLong(0) == 3)
+  }
+
+  test("prepared parameters of different types never share a memoized plan") {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+    val s = sessions.getOrCreate("pc-prep-types", "alice", "admin")
+    val h = s.prepare("SELECT :x AS v").handle
+    def run(v: Any) = s.executePrepared(h, Map("x" -> v))
+    val long = run(1L)
+    val double = run(1.0)
+    val string = run("abc")
+    val one = run("1")
+    assert(long.schema("v").dataType == LongType && long.collect().head.getLong(0) == 1L)
+    assert(double.schema("v").dataType == DoubleType && double.collect().head.getDouble(0) == 1.0)
+    assert(string.schema("v").dataType == StringType && string.collect().head.getString(0) == "abc")
+    assert(one.schema("v").dataType == StringType && one.collect().head.getString(0) == "1")
+    assert(Seq(double, string, one).forall(d => !shared(long, d)) && !shared(string, one))
+    assert(shared(run(1.0), double) && shared(run(1L), long), "same typed value reuses its plan")
+  }
+
+  test("a re-executed prepared now() advances") {
+    val s = sessions.getOrCreate("pc-prep-now", "alice", "admin")
+    val h = s.prepare("SELECT now() AS t, :k AS k").handle
+    val a = s.executePrepared(h, Map("k" -> 1L)).collect().head.get(0)
+    Thread.sleep(1100)
+    val b = s.executePrepared(h, Map("k" -> 1L)).collect().head.get(0)
+    assert(a != b, s"prepared now() frozen at $a")
+  }
+
+  test("a prepared SELECT is not memoized while the session's transaction has staged writes") {
+    val s = sessions.getOrCreate("pc-prep-txn", "alice", "admin")
+    def run(sql: String) = Statement.create(sessions, s, global, sql).collect()
+    run("DROP TABLE IF EXISTS pc_prep_txn")
+    run("CREATE TABLE pc_prep_txn USING parquet AS SELECT 1 AS id, 10 AS v")
+    val h = s.prepare("SELECT CAST(SUM(v) AS BIGINT) AS s FROM pc_prep_txn").handle
+    def sum() = s.executePrepared(h)
+    assert(shared(sum(), sum()))
+    run("BEGIN")
+    run("UPDATE pc_prep_txn SET v = v + 1")
+    assert(s.stagedTables.nonEmpty)
+    val (a, b) = (sum(), sum())
+    assert(!shared(a, b), "staged transaction tables must not be memoized")
+    run("COMMIT")
+    assert(sum().collect().head.getLong(0) == 11)
+  }
 }

@@ -98,6 +98,35 @@ class HttpServerSpec extends AnyFunSuite {
     assert(new String(resp.body(), StandardCharsets.UTF_8) == """[{"n":5}]""")
   }
 
+  test("a wire SELECT spanning more result partitions than the fetch window streams every row in order") {
+    // own session: the partition count is a session setting
+    val tok = tokenOf(post("/auth", "", "Authorization" -> basic("gizmosql_username", password)))
+    assert(post("/sql", "SET spark.sql.shuffle.partitions=64",
+      "Authorization" -> s"Bearer $tok").statusCode() == 200)
+    assert(spark.sparkContext.defaultParallelism < 64, "the result must span several windows")
+    val resp = post("/sql", "SELECT id FROM range(0, 200000, 1, 64) ORDER BY id DESC",
+      "Authorization" -> s"Bearer $tok")
+    assert(resp.statusCode() == 200)
+    val ids = ArrowIO.fromArrowStream(spark, resp.body()).collect().map(_.getLong(0))
+    assert(ids.length == 200000)
+    assert(ids.sameElements((0L until 200000L).reverse), "rows out of order")
+  }
+
+  test("Arrow and JSON carry the same rows for a multi-partition ORDER BY result") {
+    val q = "SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate FROM orders " +
+      "ORDER BY o_totalprice DESC, o_orderkey"
+    val arrow = post("/sql", q, "Authorization" -> s"Bearer $token")
+    val json = post("/sql", q, "Authorization" -> s"Bearer $token", "Accept" -> "application/json")
+    assert(arrow.statusCode() == 200 && json.statusCode() == 200)
+    val decoded = ArrowIO.fromArrowStream(spark, arrow.body())
+    val fromArrow = decoded.collect().toSeq
+    import spark.implicits._
+    val fromJson = spark.read.schema(decoded.schema)
+      .json(Seq(new String(json.body(), StandardCharsets.UTF_8)).toDS()).collect().toSeq
+    assert(fromArrow.size > 100, "the result must span several rows and partitions")
+    assert(fromJson == fromArrow)
+  }
+
   test("garbage bearer token is rejected") {
     assert(post("/sql", "SELECT 1", "Authorization" -> "Bearer not-a-jwt").statusCode() == 401)
   }
