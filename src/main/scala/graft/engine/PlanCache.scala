@@ -365,8 +365,12 @@ object PlanCache {
 
   // ---- repeated count actions --------------------------------------------
 
-  private case class CountPlan(
-      optimized: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+  /** A memoized optimized plan with its static-pin decision and partition
+    * override — what [[count]] and [[prepared]] keep per statement. The
+    * physical-plan fields are filled only for count plans.
+    */
+  private case class MemoPlan(
+      optimized: LogicalPlan,
       static: Boolean,
       parts: Int,
       // Physical-plan reuse is ONLY elision-free when re-execution cannot
@@ -404,11 +408,11 @@ object PlanCache {
     }
   }
 
-  private val countBySession = bySessionMap[java.util.Map[String, CountPlan]]()
+  private val countBySession = bySessionMap[java.util.Map[String, MemoPlan]]()
 
-  private def countStore(spark: SparkSession): java.util.Map[String, CountPlan] =
+  private def countStore(spark: SparkSession): java.util.Map[String, MemoPlan] =
     countBySession.computeIfAbsent(spark, _ =>
-      java.util.Collections.synchronizedMap(new java.util.HashMap[String, CountPlan]()))
+      java.util.Collections.synchronizedMap(new java.util.HashMap[String, MemoPlan]()))
 
   /** Execute COUNT(*) over the plan cached at `key` — the repeated-action
     * path a server's prepared statements and the bench both take.
@@ -435,7 +439,7 @@ object PlanCache {
         if (executed.exists(exchangeFree)) Some(probed) else None
       val template =
         if (reusable.isEmpty && executed.exists(cloneSafe)) executed else None
-      m.put(key, CountPlan(optimized, static, parts, reusable, template))
+      m.put(key, MemoPlan(optimized, static, parts, reusable, template))
       probed
     } else if (cp.reusable.isDefined) {
       // exchange/broadcast/subquery-free static plan: re-executing the same
@@ -447,17 +451,23 @@ object PlanCache {
       // re-execution), no planner/preparation walk
       val cloned = cp.template.get.clone()
       return cloned.executeCollect()(0).getLong(0)
-    } else if (cp.static) {
-      // Re-probe-session per call: forcing executedPlan under the
-      // adaptive-off clone pins the static plan on this fresh instance,
-      // at the same partition override the first probe chose.
-      val d = org.apache.spark.sql.GraftDatasetShim.ofRowsPreOptimized(
-        probeSession(spark, cp.parts), cp.optimized)
-      d.queryExecution.executedPlan
-      d
-    } else org.apache.spark.sql.GraftDatasetShim.ofRowsPreOptimized(spark, cp.optimized)
+    } else rooted(spark, cp)
     df.collect()(0).getLong(0)
   }
+
+  /** A NEW dataset over a memoized optimized plan. A pinned plan roots on
+    * the adaptive-off clone at the partition override the first probe chose,
+    * and forcing its executedPlan there pins the static plan on this fresh
+    * instance; any other plan roots on the live session and plans adaptive
+    * at first use.
+    */
+  private def rooted(spark: SparkSession, mp: MemoPlan): DataFrame =
+    if (mp.static) {
+      val d = org.apache.spark.sql.GraftDatasetShim.ofRowsPreOptimized(
+        probeSession(spark, mp.parts), mp.optimized)
+      d.queryExecution.executedPlan
+      d
+    } else org.apache.spark.sql.GraftDatasetShim.ofRowsPreOptimized(spark, mp.optimized)
 
   /** Run a SQL text through the cache. Commands execute eagerly in
     * `spark.sql` — they are detected from the analyzed plan, never cached,
@@ -513,14 +523,14 @@ object PlanCache {
 
   // ---- prepared executes --------------------------------------------------
 
-  private case class PreparedPlan(optimized: LogicalPlan, static: Boolean, parts: Int)
+  // (stored SQL, parameters as (name, value class, value text) sorted by
+  // name). Values are keyed on their exact text, not on Scala's ==, which
+  // calls 1L and 1.0 equal and 0.0 and -0.0 equal: each of those binds to a
+  // different literal, and the memoized plan has it folded in. The class
+  // keeps x=1, x=1.0 and x='1' apart.
+  private type PreparedKey = (String, Seq[(String, String, String)])
 
-  // (stored SQL, parameters as (name, value class, value) sorted by name):
-  // the class keeps x=1, x=1.0 and x='1' apart — Scala's == calls 1L and
-  // 1.0 equal, and each binds to a different literal type.
-  private type PreparedKey = (String, Seq[(String, String, Any)])
-
-  private val preparedBySession = bySessionMap[java.util.Map[PreparedKey, PreparedPlan]]()
+  private val preparedBySession = bySessionMap[java.util.Map[PreparedKey, MemoPlan]]()
 
   /** One call of a prepared, non-command statement with bound `params`.
     *
@@ -544,14 +554,12 @@ object PlanCache {
   def prepared(spark: SparkSession, sql: String, params: Map[String, Any])(
       build: => DataFrame): DataFrame = {
     val key: PreparedKey = (sql, params.toSeq.sortBy(_._1).map { case (k, v) =>
-      (k, if (v == null) "null" else v.getClass.getName, v)
+      (k, if (v == null) "null" else v.getClass.getName, String.valueOf(v))
     })
     val m = preparedBySession.computeIfAbsent(spark, _ => newLru())
     val hit = m.get(key)
-    if (hit != null) {
-      val on = if (hit.static) probeSession(spark, hit.parts) else spark
-      org.apache.spark.sql.GraftDatasetShim.ofRowsPreOptimized(on, hit.optimized)
-    } else {
+    if (hit != null) rooted(spark, hit)
+    else {
       val df = build
       val analyzed = df.queryExecution.analyzed
       if (isCommand(analyzed)) { invalidate(spark); df }
@@ -559,7 +567,7 @@ object PlanCache {
       else {
         val optimized = df.queryExecution.optimizedPlan
         val (probed, static, parts) = prepareOptimized(spark, optimized)
-        m.put(key, PreparedPlan(optimized, static, parts))
+        m.put(key, MemoPlan(optimized, static, parts))
         probed
       }
     }

@@ -31,10 +31,10 @@ import scala.language.implicitConversions
   *  - POST /close    close the caller's session
   *
   * Result bodies stream: both the Arrow and the JSON encodings write chunked
-  * from one Spark job per window of at most `defaultParallelism` result
-  * partitions (`GraftDatasetShim.withResultRows`), so a SELECT larger than
-  * driver memory never materializes on the driver (one window resident at a
-  * time). With `tls` set, the same endpoints serve HTTPS via the JDK's
+  * from one Spark job per window of result partitions, each window bounded
+  * by `defaultParallelism` partitions and by a byte budget
+  * (`GraftDatasetShim.withResultRows`), so a SELECT larger than driver
+  * memory never materializes on the driver (one window resident at a time). With `tls` set, the same endpoints serve HTTPS via the JDK's
   * `HttpsServer` — the reference's TLS listener
   * (`gizmosql_library.cpp:497-560`, cert/key material under `tls/`); a
   * plaintext client against a TLS port is refused at the handshake.

@@ -17,9 +17,9 @@ import scala.jdk.CollectionConverters._
   * endpoint would wrap these calls 1:1.
   *
   * Results come from `GraftDatasetShim.withResultRows`: one Spark job per
-  * window of at most `defaultParallelism` result partitions, in partition
-  * order, so the driver holds one window of rows (as UnsafeRow bytes) plus
-  * the `batchSize` rows being encoded.
+  * window of at most `defaultParallelism` result partitions and a byte
+  * budget, in partition order, so the driver holds one window of rows (as
+  * UnsafeRow bytes) plus the `batchSize` rows being encoded.
   *
   * Value coverage: all atomic types, arrays of atomics, structs of atomics,
   * and maps with atomic keys/values (schema mapping in

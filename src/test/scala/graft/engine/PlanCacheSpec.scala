@@ -355,8 +355,37 @@ class PlanCacheSpec extends AnyFunSuite {
     assert(PlanCache.sql(s, pure) eq PlanCache.sql(s, pure))
   }
 
-  test("a cached static-pinned ORDER BY result is fetched in one Spark job") {
+  /** Run `body` under a fresh job group of `s`; also return how many Spark
+    * jobs it started.
+    */
+  private def countingJobs[A](s: org.apache.spark.sql.SparkSession)(body: => A): (A, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"fetch-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    s.sparkContext.addSparkListener(listener)
+    s.sparkContext.setJobGroup(group, "fetch")
+    try {
+      val out = body
+      var last = -1
+      var same = 0
+      while (same < 3) { // listener events are async: 3 quiet polls
+        Thread.sleep(100)
+        val now = jobs.get
+        if (now == last) same += 1 else { same = 0; last = now }
+      }
+      (out, jobs.get)
+    } finally {
+      s.sparkContext.clearJobGroup()
+      s.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("a cached static-pinned ORDER BY result is fetched in one Spark job") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val s = GraftSession.local().newSession()
     graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
@@ -365,33 +394,9 @@ class PlanCacheSpec extends AnyFunSuite {
     assert(!plan.isInstanceOf[AdaptiveSparkPlanExec], s"expected a static pin:\n$plan")
     val partitions = plan.execute().getNumPartitions
     assert(partitions > 1, "the result must span several partitions")
-    val group = s"fetch-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet(): Unit
-    }
     def fetchJobs(): (Seq[String], Int) = {
-      jobs.set(0)
-      s.sparkContext.addSparkListener(listener)
-      s.sparkContext.setJobGroup(group, "fetch")
-      val bytes =
-        try {
-          val out = graft.sources.ArrowIO.toArrowStream(df)
-          var last = -1
-          var same = 0
-          while (same < 3) { // listener events are async: 3 quiet polls
-            Thread.sleep(100)
-            val now = jobs.get
-            if (now == last) same += 1 else { same = 0; last = now }
-          }
-          out
-        } finally {
-          s.sparkContext.clearJobGroup()
-          s.sparkContext.removeSparkListener(listener)
-        }
-      (graft.sources.ArrowIO.fromArrowStream(s, bytes).collect().map(_.getString(1)).toSeq, jobs.get)
+      val (bytes, n) = countingJobs(s)(graft.sources.ArrowIO.toArrowStream(df))
+      (graft.sources.ArrowIO.fromArrowStream(s, bytes).collect().map(_.getString(1)).toSeq, n)
     }
     val (first, _) = fetchJobs()
     assert(first == first.sorted && first.size == 25)
@@ -400,6 +405,14 @@ class PlanCacheSpec extends AnyFunSuite {
     val (again, n) = fetchJobs()
     assert(again == first)
     assert(n == 1, s"fetching $partitions result partitions took $n jobs")
+  }
+
+  test("a command's result is fetched without a Spark job") {
+    val s = spark.newSession()
+    val df = s.sql("SHOW DATABASES") // runs here; its rows stay on the driver
+    val (bytes, n) = countingJobs(s)(graft.sources.ArrowIO.toArrowStream(df))
+    assert(n == 0, s"fetching a command result took $n jobs")
+    assert(graft.sources.ArrowIO.fromArrowStream(s, bytes).collect().map(_.getString(0)).contains("default"))
   }
 
   // ---- prepared executes ---------------------------------------------------
@@ -445,6 +458,12 @@ class PlanCacheSpec extends AnyFunSuite {
     assert(one.schema("v").dataType == StringType && one.collect().head.getString(0) == "1")
     assert(Seq(double, string, one).forall(d => !shared(long, d)) && !shared(string, one))
     assert(shared(run(1.0), double) && shared(run(1L), long), "same typed value reuses its plan")
+    // 0.0 and -0.0 are == in Scala but fold to different literals
+    val zero = run(0.0)
+    val negZero = run(-0.0)
+    assert(!shared(zero, negZero))
+    assert(zero.collect().head.getDouble(0).equals(0.0))
+    assert(negZero.collect().head.getDouble(0).equals(-0.0), "-0.0 answered with 0.0's plan")
   }
 
   test("a re-executed prepared now() advances") {

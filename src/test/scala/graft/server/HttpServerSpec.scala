@@ -112,6 +112,22 @@ class HttpServerSpec extends AnyFunSuite {
     assert(ids.sameElements((0L until 200000L).reverse), "rows out of order")
   }
 
+  test("a wire result larger than spark.driver.maxResultSize streams when each partition fits") {
+    // 16 partitions of about 1.4 MB each (as UnsafeRows): the 2 MB limit
+    // admits one partition per job but not two
+    val sc = spark.sparkContext
+    assert(sc.defaultParallelism >= 2, "a fetch window must be able to hold two partitions")
+    val q = "SELECT id, repeat('x', 200) AS pad FROM range(0, 96000, 1, 16)"
+    val resp = org.apache.spark.GraftConfShim.withContextConf(sc, "spark.driver.maxResultSize", "2m") {
+      post("/sql", q, "Authorization" -> s"Bearer $token")
+    }
+    assert(resp.statusCode() == 200)
+    val rows = ArrowIO.fromArrowStream(spark, resp.body()).collect()
+    assert(rows.length == 96000)
+    assert(rows.map(_.getLong(0)).sameElements(0L until 96000L), "rows out of order")
+    assert(rows.forall(_.getString(1).length == 200))
+  }
+
   test("Arrow and JSON carry the same rows for a multi-partition ORDER BY result") {
     val q = "SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate FROM orders " +
       "ORDER BY o_totalprice DESC, o_orderkey"
