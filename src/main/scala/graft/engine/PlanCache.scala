@@ -455,19 +455,15 @@ object PlanCache {
     df.collect()(0).getLong(0)
   }
 
-  /** A NEW dataset over a memoized optimized plan. A pinned plan roots on
-    * the adaptive-off clone at the partition override the first probe chose,
-    * and forcing its executedPlan there pins the static plan on this fresh
-    * instance; any other plan roots on the live session and plans adaptive
-    * at first use.
+  /** A NEW dataset over a memoized optimized plan, planned physically at
+    * first use under the session it is rooted on: a pinned plan on the
+    * adaptive-off clone at the partition override the first probe chose, so
+    * it plans static; any other plan on the live session, so it plans
+    * adaptive.
     */
   private def rooted(spark: SparkSession, mp: MemoPlan): DataFrame =
-    if (mp.static) {
-      val d = org.apache.spark.sql.GraftDatasetShim.ofRowsPreOptimized(
-        probeSession(spark, mp.parts), mp.optimized)
-      d.queryExecution.executedPlan
-      d
-    } else org.apache.spark.sql.GraftDatasetShim.ofRowsPreOptimized(spark, mp.optimized)
+    org.apache.spark.sql.GraftDatasetShim.ofRowsPreOptimized(
+      if (mp.static) probeSession(spark, mp.parts) else spark, mp.optimized)
 
   /** Run a SQL text through the cache. Commands execute eagerly in
     * `spark.sql` — they are detected from the analyzed plan, never cached,

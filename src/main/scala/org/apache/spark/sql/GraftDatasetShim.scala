@@ -192,7 +192,7 @@ object GraftDatasetShim {
                 if (largest == 0) maxWidth else math.min(maxWidth.toLong, math.max(1L, budget / largest)).toInt
               val ps = start until math.min(n, start + width)
               start = ps.end
-              // a lone partition ships whole, as toLocalIterator's did
+              // a lone partition ships whole: maxResultSize is its only limit
               val got = fetch(ps, if (ps.size == 1) Long.MaxValue else budget / ps.size)
               got.indices.iterator.map { i =>
                 val bytes = if (got(i) != null) got(i) else fetch(Seq(ps(i)), Long.MaxValue)(0)

@@ -434,6 +434,8 @@ class PlanCacheSpec extends AnyFunSuite {
     val b = count()
     assert(shared(a, b), "the second call must reuse the memoized optimized plan")
     assert(!(a eq b), "every call roots a new dataset")
+    assert(!b.queryExecution.executedPlan.isInstanceOf[
+      org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec], "a pinned plan re-executes static")
     assert(b.collect().head.getLong(0) == 1)
     run("INSERT INTO pc_prep_ins VALUES (2)")
     assert(count().collect().head.getLong(0) == 2)
