@@ -120,12 +120,13 @@ object ManifestCatalog {
     new java.util.WeakHashMap[SparkSession, SessionView]())
 
   /** Route this session's reads through the current manifest: register a
-    * temp view per entry (shadowing the base catalog table), drop views for
-    * entries that folded away, and invalidate the session's plan cache —
-    * cached plans resolved against the previous paths. No-op (one version
-    * compare) when the manifest hasn't moved. `skip` protects tables the
-    * session's own OPEN transaction is shadowing — its read-your-writes
-    * view outranks the committed manifest.
+    * temp view per entry (shadowing the base catalog table) and drop views
+    * for entries that folded away. No-op (one version compare) when the
+    * manifest hasn't moved. Returns whether the views changed; the caller
+    * then flushes the session's caches through `PlanCache.sync` — cached
+    * plans and file listings resolved against the previous routing. `skip`
+    * protects tables the session's own OPEN transaction is shadowing — its
+    * read-your-writes view outranks the committed manifest.
     */
   def refresh(spark: SparkSession, skip: Set[String] = Set.empty): Boolean = {
     val p = manifestPath(spark)
@@ -165,16 +166,7 @@ object ManifestCatalog {
         ordered.createOrReplaceTempView(t)
       }
     }
-    // A moved manifest means base tables were (or are being) folded by a
-    // commit: purge this session's cached relations wholesale, or a
-    // pre-commit file listing serves FILE_NOT_EXIST after the overwrite.
-    // The relation cache is per-session — the writing session's own insert
-    // refresh never reaches readers — and the names may not appear in
-    // either managed set (a commit publishes AND folds away between two of
-    // this session's statements), so per-name refresh cannot be complete.
-    spark.sessionState.catalog.invalidateAllCachedTables()
     bySession.put(spark, SessionView(version, nowManaged, skip))
-    PlanCache.invalidate(spark)
     true
   }
 

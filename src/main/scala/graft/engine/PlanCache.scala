@@ -21,13 +21,18 @@ import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoin
   * workloads a long-lived server actually serves.
   *
   * Correctness contract:
-  *   - Only pure queries are cached. A statement that resolves to a command
-  *     (DDL/DML — anything that can change catalog or data) is never cached
-  *     AND invalidates the session's cache, so a cached SELECT can never
-  *     read a view/table definition from before the command.
-  *   - Engine-managed mutations outside the SQL path (ATTACH/DETACH,
-  *     IMPORT DATABASE, SET — SETs can re-fold GIZMOSQL_* pseudo-function
-  *     literals) call [[invalidate]] explicitly.
+  *   - One global mutation epoch decides staleness. A write moves it
+  *     ([[bump]]) after the write has returned; each session remembers the
+  *     epoch its caches were built at, and its next look at this cache
+  *     (the statement-start [[sync]], or any lookup) finds it moved — or
+  *     `sync` is told the table manifest moved — and drops that session's
+  *     relation cache and all three stores. So every session's next
+  *     statement sees every returned write, whoever wrote.
+  *   - Commands are detected here from the analyzed plan ([[sql]],
+  *     [[prepared]]): they run unmemoized and move the epoch. The writes
+  *     that bypass this cache move it themselves: `Statement.create`'s
+  *     intercepted writes and `Ingest.ingest`. The per-session flush is
+  *     private; nothing outside this object clears a session.
   *   - Keys are per SparkSession (sessions are isolated `newSession`s), held
   *     weakly so closed sessions collect.
   *   - A query whose analyzed tree holds a non-deterministic expression
@@ -38,9 +43,7 @@ import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoin
   *     typed parameter values), the optimized plan, the static-pin decision
   *     and the partition override — never a dataset or executed plan, so
   *     no shuffle output or broadcast relation is pinned between calls.
-  *     Every call plans physically and executes in full. [[invalidate]]
-  *     clears this memo with the rest, so every invalidation above covers
-  *     it.
+  *     Every call plans physically and executes in full.
   */
 object PlanCache {
   // An executed plan pins its broadcast hash relations until evicted: each
@@ -62,7 +65,41 @@ object PlanCache {
   private def bySessionMap[V](): java.util.Map[SparkSession, V] =
     java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, V]())
 
-  private val bySession = bySessionMap[java.util.Map[String, DataFrame]]()
+  // ---- mutation epoch ----------------------------------------------------
+
+  private val epoch = new java.util.concurrent.atomic.AtomicLong()
+
+  // One session's stores, built at epoch `seen`. A flush swaps in a new
+  // instance: a statement still holding the old one writes where no one reads.
+  private final class Stores(val seen: Long) {
+    val sql = newLru[String, DataFrame]()
+    val count = newLru[String, MemoPlan]()
+    val prepared = newLru[PreparedKey, MemoPlan]()
+  }
+
+  private val bySession = bySessionMap[Stores]()
+
+  /** Record a write once it has returned: every session's next look re-resolves. */
+  def bump(): Unit = { epoch.incrementAndGet(); () }
+
+  /** The statement-start check; `force` flushes for what the epoch does not
+    * count (a moved table manifest).
+    */
+  def sync(spark: SparkSession, force: Boolean): Unit = { stores(spark, force); () }
+
+  private def stores(spark: SparkSession, force: Boolean = false): Stores = {
+    val now = epoch.get // before the flush: a bump during it is caught next time
+    val cur = bySession.get(spark)
+    if (cur != null && cur.seen == now && !force) cur
+    else {
+      // Spark's relation cache holds file listings per session; a writer's
+      // refresh never reaches other sessions. A first look flushes too.
+      spark.sessionState.catalog.invalidateAllCachedTables()
+      val fresh = new Stores(now)
+      bySession.put(spark, fresh)
+      fresh
+    }
+  }
 
   // Adaptive-off clone for the static-plan probe in [[prepare]] and the
   // static branch of [[count]]. Probing under a clone (copied conf, shared
@@ -112,15 +149,12 @@ object PlanCache {
       }
     }
 
-  private def store(spark: SparkSession): java.util.Map[String, DataFrame] =
-    bySession.computeIfAbsent(spark, _ => newLru())
-
   /** Reuse the DataFrame prepared for `key` in this session, or build it.
     * The caller vouches that `build` is pure (no eager side effects) —
     * engine surfaces mark side-effecting operators uncacheable.
     */
   def get(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val m = store(spark)
+    val m = stores(spark).sql
     val hit = m.get(key)
     if (hit != null) hit
     else {
@@ -408,12 +442,6 @@ object PlanCache {
     }
   }
 
-  private val countBySession = bySessionMap[java.util.Map[String, MemoPlan]]()
-
-  private def countStore(spark: SparkSession): java.util.Map[String, MemoPlan] =
-    countBySession.computeIfAbsent(spark, _ =>
-      java.util.Collections.synchronizedMap(new java.util.HashMap[String, MemoPlan]()))
-
   /** Execute COUNT(*) over the plan cached at `key` — the repeated-action
     * path a server's prepared statements and the bench both take.
     *
@@ -428,7 +456,7 @@ object PlanCache {
     * wrapped shape passed the same static-pin probe as [[prepare]].
     */
   def count(spark: SparkSession, key: String)(build: => DataFrame): Long = {
-    val m = countStore(spark)
+    val m = stores(spark).count
     val cp = m.get(key)
     val df = if (cp == null) {
       val wrapped = get(spark, key)(build).groupBy().count()
@@ -467,17 +495,17 @@ object PlanCache {
 
   /** Run a SQL text through the cache. Commands execute eagerly in
     * `spark.sql` — they are detected from the analyzed plan, never cached,
-    * and flush the session's cache (they may have changed what cached plans
-    * resolved against).
+    * and move the epoch (they may have changed what cached plans resolved
+    * against, in any session).
     */
   def sql(spark: SparkSession, text: String): DataFrame = {
-    val m = store(spark)
+    val m = stores(spark).sql
     val hit = m.get(text)
     if (hit != null) hit
     else {
       val df = spark.sql(text)
       val analyzed = df.queryExecution.analyzed
-      if (isCommand(analyzed)) { invalidate(spark); df }
+      if (isCommand(analyzed)) { bump(); df }
       else if (!storable(analyzed)) df
       else {
         val prepared = prepare(spark, df)
@@ -526,8 +554,6 @@ object PlanCache {
   // keeps x=1, x=1.0 and x='1' apart.
   private type PreparedKey = (String, Seq[(String, String, String)])
 
-  private val preparedBySession = bySessionMap[java.util.Map[PreparedKey, MemoPlan]]()
-
   /** One call of a prepared, non-command statement with bound `params`.
     *
     * The first call with a given (stored SQL, typed parameter values) in
@@ -539,10 +565,9 @@ object PlanCache {
     * the live session otherwise — so it plans physically and executes in
     * full. Only logical plans are kept: no executed plan, shuffle output or
     * broadcast relation outlives its call. Bounded like the statement cache
-    * (LRU, `MaxEntries` per session) and cleared with it by
-    * [[invalidate]].
+    * (LRU, `MaxEntries` per session) and flushed with it.
     *
-    * Never memoized: commands (which also invalidate, as in [[sql]]) and
+    * Never memoized: commands (which also move the epoch, as in [[sql]]) and
     * plans that are not [[storable]]. The caller keeps transaction-local
     * resolution out: a session with staged transaction tables does not
     * come here.
@@ -552,13 +577,13 @@ object PlanCache {
     val key: PreparedKey = (sql, params.toSeq.sortBy(_._1).map { case (k, v) =>
       (k, if (v == null) "null" else v.getClass.getName, String.valueOf(v))
     })
-    val m = preparedBySession.computeIfAbsent(spark, _ => newLru())
+    val m = stores(spark).prepared
     val hit = m.get(key)
     if (hit != null) rooted(spark, hit)
     else {
       val df = build
       val analyzed = df.queryExecution.analyzed
-      if (isCommand(analyzed)) { invalidate(spark); df }
+      if (isCommand(analyzed)) { bump(); df }
       else if (!storable(analyzed)) df
       else {
         val optimized = df.queryExecution.optimizedPlan
@@ -567,12 +592,5 @@ object PlanCache {
         probed
       }
     }
-  }
-
-  def invalidate(spark: SparkSession): Unit = {
-    bySession.remove(spark)
-    countBySession.remove(spark)
-    preparedBySession.remove(spark)
-    ()
   }
 }

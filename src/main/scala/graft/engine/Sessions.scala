@@ -91,17 +91,15 @@ final class SessionState(
       case Some(p) => runPrepared(p, params)
     }
 
-  /** Prepared DML executes eagerly inside spark.sql — a mutation outside
-    * PlanCache.sql, so it must invalidate explicitly (the PlanCache
-    * contract; same rule as COPY FROM / RowDml). Other statements reuse
-    * their optimized plan and static pin per parameter values
-    * ([[PlanCache.prepared]]), except while this session's transaction has
-    * staged tables — the rule `Statement.create` applies to direct SQL.
+  /** Run a prepared statement through [[PlanCache.prepared]]: queries reuse
+    * their optimized plan and static pin per parameter values; commands run
+    * unmemoized and move the mutation epoch. While this session's
+    * transaction has staged tables, queries run unmemoized — the rule
+    * `Statement.create` applies to direct SQL.
     */
   private def runPrepared(p: Prepared, params: Map[String, Any]) = {
     def run = if (params.isEmpty) spark.sql(p.sql) else spark.sql(p.sql, params)
-    if (p.isCommand) { val df = run; PlanCache.invalidate(spark); df }
-    else if (stagedTables.nonEmpty) run
+    if (stagedTables.nonEmpty && !p.isCommand) run
     else PlanCache.prepared(spark, p.sql, params)(run)
   }
 
@@ -185,18 +183,18 @@ final class SessionManager(root: SparkSession, global: GlobalSettings) {
     */
   val transactions = new Transactions
 
-  /** Route `session`'s reads through the current table manifest
-    * (cross-table commit visibility, [[ManifestCatalog]]) before it runs a
-    * statement — direct or prepared. A one-getAttr version check; views are
-    * re-registered and the plan cache invalidated only when a commit moved
-    * the manifest. Tables the session's own open transaction shadows are
-    * skipped: read-your-writes outranks the committed view.
+  /** The statement-start check every entry runs first (`Statement.create`,
+    * prepare, execute, ingest). Reads route through the current table
+    * manifest ([[ManifestCatalog]]; tables the session's own open
+    * transaction shadows are skipped: read-your-writes outranks the
+    * committed view), and [[PlanCache.sync]] drops the session's relation
+    * cache and plans when the mutation epoch or the manifest views moved.
     */
   def refreshManifest(session: SessionState): Unit =
     // staged keys are canonical (`db.t`); the manifest uses the bare
     // spelling for default-db tables — translate before comparing
-    ManifestCatalog.refresh(session.spark,
-      session.stagedTables.map(TableNames.manifestName)): Unit
+    PlanCache.sync(session.spark, ManifestCatalog.refresh(session.spark,
+      session.stagedTables.map(TableNames.manifestName)))
 
   def getOrCreate(sessionId: String, user: String, role: String,
       catalogAccess: Option[Set[String]] = None): SessionState = {

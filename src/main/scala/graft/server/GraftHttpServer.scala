@@ -615,6 +615,7 @@ final class GraftHttpServer(
         case StatementGuard.Blocked(reason) => (403, "application/json", jsonError(reason))
         case StatementGuard.Allowed =>
           try {
+            sessions.refreshManifest(session)
             val p = session.prepare(sql)
             val cols = p.schema.map(_.fieldNames.mkString("[\"", "\",\"", "\"]")).getOrElse("null")
             (200, "application/json",
@@ -646,8 +647,6 @@ final class GraftHttpServer(
       val wantJson =
         Option(ex.getRequestHeaders.getFirst("Accept")).exists(_.contains("application/json"))
       statementErrors {
-        // Same commit visibility as Statement.create: another session's
-        // COMMIT must reach a re-executed prepared SELECT.
         sessions.refreshManifest(session)
         val df = session.executePrepared(handle, params)
         val bypass = session.isAdmin &&
@@ -686,6 +685,7 @@ final class GraftHttpServer(
         case _ => Ingest.IfExists.Unspecified
       }
       try {
+        sessions.refreshManifest(session)
         val data = ArrowIO.fromArrowStream(session.spark, ex.getRequestBody.readAllBytes())
         val result = Ingest.ingest(session.spark, data, table, mode)
         (200, "application/json",

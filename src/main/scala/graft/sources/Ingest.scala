@@ -48,14 +48,15 @@ object Ingest {
     data.select(cols.toIndexedSeq: _*)
   }
 
+  // Moves the plan-cache epoch once the write has returned, or thrown
+  // part-way, so every session's next statement reads the new rows.
   def ingest(
       spark: SparkSession,
       data: DataFrame,
       table: String,
       ifExists: IfExists = IfExists.Unspecified,
       createIfMissing: Boolean = true,
-      temporary: Boolean = false): IngestResult = {
-
+      temporary: Boolean = false): IngestResult = try {
     val expected = data.count()
 
     if (temporary) {
@@ -88,7 +89,7 @@ object Ingest {
         verifyCount(spark, table, before + expected)
         IngestResult(table, expected, created = false)
     }
-  }
+  } finally graft.engine.PlanCache.bump()
 
   /** Post-append row-count verification (`duckdb_server.cpp:1955-1974`). */
   private def verifyCount(spark: SparkSession, table: String, expected: Long): Unit = {

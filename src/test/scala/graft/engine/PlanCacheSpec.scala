@@ -41,12 +41,23 @@ class PlanCacheSpec extends AnyFunSuite {
     assert(!(a eq b), "cache keys are per session")
   }
 
-  test("explicit invalidate drops entries") {
+  test("an epoch bump drops the session's entries") {
     val s = spark.newSession()
     val a = PlanCache.sql(s, "SELECT 'inv' AS v")
-    PlanCache.invalidate(s)
+    PlanCache.bump()
     val b = PlanCache.sql(s, "SELECT 'inv' AS v")
     assert(!(a eq b))
+  }
+
+  test("the count memo is bounded like the other stores") {
+    val s = spark.newSession()
+    var builds = 0
+    def build = { builds += 1; s.range(3).toDF() }
+    assert(PlanCache.count(s, "bound-0")(build) == 3)
+    (1 to 64).foreach(i => PlanCache.count(s, s"bound-$i")(s.range(3).toDF()))
+    assert(builds == 1)
+    assert(PlanCache.count(s, "bound-0")(build) == 3)
+    assert(builds == 2, "65 distinct keys must evict the first key's memoized plan")
   }
 
   test("side-effecting operators are excluded from the op-level cache") {
@@ -94,7 +105,7 @@ class PlanCacheSpec extends AnyFunSuite {
       // Same query with the size bound off => models the at-scale posture:
       // shuffled joins keep adaptive execution.
       s.conf.set("spark.graft.planCache.staticMaxInputBytes", "0")
-      PlanCache.invalidate(s)
+      PlanCache.bump()
       val shuffled = PlanCache.sql(s,
         "SELECT COUNT(*) AS c FROM orders JOIN customer ON o_custkey = c_custkey")
       assert(shuffled.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec],
@@ -175,7 +186,7 @@ class PlanCacheSpec extends AnyFunSuite {
       assert(aggTopped.count() == 1)
     } finally {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
-      PlanCache.invalidate(s)
+      PlanCache.bump()
     }
     // Generator-bearing (explode) broadcast build: blocked both by the
     // plan-wide rowMultiplier gate and by the explicit generator arm of the
@@ -217,7 +228,7 @@ class PlanCacheSpec extends AnyFunSuite {
       assert(exploded.count() == 1)
     } finally {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
-      PlanCache.invalidate(s)
+      PlanCache.bump()
     }
   }
 
@@ -267,7 +278,7 @@ class PlanCacheSpec extends AnyFunSuite {
     pool.submit(new Runnable { def run(): Unit = {
       start.await()
       (0 until rounds).foreach { i =>
-        PlanCache.invalidate(s) // force a fresh probe every round
+        PlanCache.bump() // force a fresh probe every round
         PlanCache.sql(s,
           s"SELECT n_name, COUNT(*) AS c FROM nation JOIN region ON n_regionkey = r_regionkey GROUP BY n_name HAVING COUNT(*) > $i")
       }
@@ -333,7 +344,7 @@ class PlanCacheSpec extends AnyFunSuite {
     assert(stages2Final == stages1,
       s"second count ran $stages2Final stages vs $stages1 — work was reused, not re-executed")
     // Commands invalidate the memoized count plan alongside the plan cache.
-    PlanCache.invalidate(s)
+    PlanCache.bump()
     val (v3, _) = measured(PlanCache.count(s, "cnt:test")(s.sql(q)))
     assert(v3 == expected)
   }

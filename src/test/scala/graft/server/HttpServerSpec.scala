@@ -291,6 +291,30 @@ class HttpServerSpec extends AnyFunSuite {
     assert(new String(count.body(), StandardCharsets.UTF_8) == """[{"n":10}]""")
   }
 
+  test("a cached /sql count sees an /ingest append, in the ingesting session and in another") {
+    val other = tokenOf(post("/auth", "", "Authorization" -> basic("gizmosql_username", password)))
+    val payload = ArrowIO.toArrowStream(
+      spark.sql("SELECT r_regionkey AS k, r_name AS name FROM region"))
+    def ingest(mode: String): Unit = {
+      val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/ingest"))
+        .POST(HttpRequest.BodyPublishers.ofByteArray(payload))
+        .header("Authorization", s"Bearer $token")
+        .header("X-Graft-Table", "wire_ingest_vis").header("X-Graft-Mode", mode)
+      val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode() == 200, resp.body())
+    }
+    def count(tok: String): String = new String(post("/sql",
+      "SELECT COUNT(*) AS n FROM wire_ingest_vis",
+      "Authorization" -> s"Bearer $tok", "Accept" -> "application/json").body(),
+      StandardCharsets.UTF_8)
+    ingest("replace")
+    // read twice in each session, so the second read is a plan-cache hit
+    for (t <- Seq(token, other); _ <- 1 to 2) assert(count(t) == """[{"n":5}]""")
+    ingest("append")
+    assert(count(token) == """[{"n":10}]""", "the ingesting session")
+    assert(count(other) == """[{"n":10}]""", "another session")
+  }
+
   test("readonly role cannot ingest") {
     val roToken = Auth.mintToken(secret, "reader", "readonly", "graft-instance")
     val resp = post("/ingest", "", "Authorization" -> s"Bearer $roToken",
