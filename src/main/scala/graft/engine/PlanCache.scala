@@ -1,23 +1,25 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult, LogicalPlan, ShowTables}
 import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.command.{DescribeColumnCommand, DescribeTableCommand,
+  ExplainCommand, ShowColumnsCommand, ShowTablesCommand}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 
 /** Session-scoped prepared-plan cache: repeated statement texts reuse a
   * DataFrame rooted at the OPTIMIZED logical plan instead of re-running
   * parse + analysis + full optimization, the fixed per-statement Catalyst
-  * cost (~15-120 ms/statement measured on the TPC-H shapes at sf0.1 —
-  * `graft.tools.CacheProbe`). The optimized root matters beyond the first
-  * call: any action that re-wraps the plan (`count()` adds an aggregate,
-  * `write` a command) re-runs the optimizer over the whole tree per call,
-  * and over a pre-converged tree that run is one cheap fixpoint. The
-  * reference engine gets the same effect from its prepared-statement reuse
-  * (`/root/reference/src/duckdb/duckdb_statement.cpp` re-prepare path); on a
-  * 100 TB cluster the win is latency-per-statement for the dashboard/repeat
+  * cost (~15-120 ms/statement measured on the TPC-H shapes at sf0.1 in round
+  * 6; ARCHITECTURE.md at 7f0c93f). The optimized root matters beyond the
+  * first call: any action that re-wraps the plan (`count()` adds an
+  * aggregate, `write` a command) re-runs the optimizer over the whole tree
+  * per call, and over a pre-converged tree that run is one cheap fixpoint.
+  * The reference engine gets the same effect from its prepared-statement
+  * reuse (`/root/reference/src/duckdb/duckdb_statement.cpp` re-prepare path);
+  * on a 100 TB cluster the win is latency-per-statement for the dashboard/repeat
   * workloads a long-lived server actually serves.
   *
   * Correctness contract:
@@ -29,8 +31,10 @@ import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoin
   *     relation cache and all three stores. So every session's next
   *     statement sees every returned write, whoever wrote.
   *   - Commands are detected here from the analyzed plan ([[sql]],
-  *     [[prepared]]): they run unmemoized and move the epoch. The writes
-  *     that bypass this cache move it themselves: `Statement.create`'s
+  *     [[prepared]]): they run unmemoized and move the epoch, except Spark's
+  *     read-only EXPLAIN, DESCRIBE and SHOW TABLES/COLUMNS commands
+  *     ([[movesEpoch]]), which change nothing a plan resolved against. The
+  *     writes that bypass this cache move it themselves: `Statement.create`'s
   *     intercepted writes and `Ingest.ingest`. The per-session flush is
   *     private; nothing outside this object clears a session.
   *   - Keys are per SparkSession (sessions are isolated `newSession`s), held
@@ -112,8 +116,8 @@ object PlanCache {
   // The clone is CACHED per live session and re-validated by conf
   // fingerprint on every use: cloneSession() builds a whole SessionState
   // (catalog, analyzer, optimizer, extension re-injection — measured
-  // 200-300 ms via graft.tools.CountPathProbe), far too hot for a per-call
-  // path, while a stale cached clone would keep planning under whatever
+  // 200-300 ms in round 7; ARCHITECTURE.md at 7f0c93f), far too hot for a
+  // per-call path, while a stale cached clone would keep planning under whatever
   // the conf was at first prepare (a live `SET autoBroadcastJoinThreshold`
   // would silently not reach it — caught by PlanCacheSpec). Comparing the
   // live session's set-conf overlay (a few dozen entries) costs ~µs and
@@ -168,7 +172,7 @@ object PlanCache {
     *
     * Adaptive execution materializes a query stage at every exchange and
     * re-optimizes between stages — ~50-75 ms of driver dead time per round
-    * (`graft.tools.JitProbe`/`Profile`, sf0.1). That buys runtime join
+    * (round 6, sf0.1; ARCHITECTURE.md at 7f0c93f). That buys runtime join
     * re-strategy, partition coalescing, and skew splitting — all properties
     * of SHUFFLED joins. A plan whose joins all resolved to broadcasts at
     * planning time has nothing for AQE to re-decide, so it runs the static
@@ -243,7 +247,7 @@ object PlanCache {
       // a few ms of task launch, and join re-strategy was already decided
       // from honest leaf sizes. Measured on the bench join family at
       // sf0.1: static is 15-160 ms FASTER per query
-      // (graft.tools.ConfExperiment, adaptive=false A/B). The bound
+      // (round 7 adaptive=false A/B; ARCHITECTURE.md at 7f0c93f). The bound
       // self-scales exactly like autoBroadcastJoinThreshold: the same
       // query over 100x the data blows the bound and keeps full adaptive
       // execution — so this never sacrifices scale safety, it only stops
@@ -308,7 +312,7 @@ object PlanCache {
       //     dimension-pre-reduction star shapes — join_self_nation/tpch_h05,
       //     whose builds are supplier⋈nation / nation⋈region chains;
       //     measured −17/−29 ms per call and the same plan inventory,
-      //     R17StaticAb). This deliberately includes duplicate-key
+      //     OPTIMIZATION_r17.md). This deliberately includes duplicate-key
       //     (many-to-many) chains whose OUTPUT can exceed the leaf bound:
       //     adaptive has no runtime escape for those either — no shuffle
       //     under the build to re-plan from — so the pin changes nothing
@@ -364,13 +368,13 @@ object PlanCache {
       val ok = !derivedBuild && (smallInput || (!shuffledJoin && all.forall(
         _.collect { case e: ShuffleExchangeExec => e }.size <= 3)))
       // Size-scaled shuffle partitions for small-input pins: AQE would
-      // coalesce these exchanges down to a handful of partitions at
-      // runtime; the static plan sizes them the same way from the same
-      // bound (~16 MB of input per partition, floor 4, never above the
-      // live setting) — measured 60-380 ms faster per query on the bench
-      // join family (graft.tools.SmallPartProbe, 32 vs 8 partitions at
-      // sf0.1). Values cannot depend on the partition count: sampling here
-      // is md5-deterministic, and the global-ntile id arithmetic corrects
+      // coalesce these exchanges down to a handful of partitions at runtime;
+      // the static plan sizes them the same way from the same bound (~16 MB
+      // of input per partition, floor 4, never above the live setting) —
+      // measured 60-380 ms faster per query on the bench join family (round
+      // 7, 32 vs 8 partitions at sf0.1; ARCHITECTURE.md at 7f0c93f). Values
+      // cannot depend on the partition count: sampling here is
+      // md5-deterministic, and the global-ntile id arithmetic corrects
       // per-partition offsets by construction.
       val live =
         try spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
@@ -496,7 +500,7 @@ object PlanCache {
   /** Run a SQL text through the cache. Commands execute eagerly in
     * `spark.sql` — they are detected from the analyzed plan, never cached,
     * and move the epoch (they may have changed what cached plans resolved
-    * against, in any session).
+    * against, in any session) unless they are read-only ([[movesEpoch]]).
     */
   def sql(spark: SparkSession, text: String): DataFrame = {
     val m = stores(spark).sql
@@ -505,7 +509,7 @@ object PlanCache {
     else {
       val df = spark.sql(text)
       val analyzed = df.queryExecution.analyzed
-      if (isCommand(analyzed)) { bump(); df }
+      if (isCommand(analyzed)) { if (movesEpoch(analyzed)) bump(); df }
       else if (!storable(analyzed)) df
       else {
         val prepared = prepare(spark, df)
@@ -520,6 +524,25 @@ object PlanCache {
       case c: Command => c
       case r: CommandResult => r
     }.isDefined
+
+  /** Whether a command moves the epoch: every command does except the
+    * read-only ones on an explicit allow-list, matched at the root of the
+    * analyzed plan (inside the `CommandResult` Spark's eager execution
+    * leaves there). `SHOW TABLES` on the session catalog stays the v2
+    * `ShowTables` node unless `spark.sql.legacy.useV1Command` is set. An
+    * unknown command counts as a write.
+    */
+  private def movesEpoch(analyzed: LogicalPlan): Boolean = {
+    val root = analyzed match {
+      case r: CommandResult => r.commandLogicalPlan
+      case p => p
+    }
+    root match {
+      case _: ExplainCommand | _: DescribeTableCommand | _: DescribeColumnCommand |
+          _: ShowTables | _: ShowTablesCommand | _: ShowColumnsCommand => false
+      case _ => true
+    }
+  }
 
   /** Whether a pure query's plan may be kept and re-run. Two kinds must be
     * planned per call instead:
@@ -567,7 +590,7 @@ object PlanCache {
     * broadcast relation outlives its call. Bounded like the statement cache
     * (LRU, `MaxEntries` per session) and flushed with it.
     *
-    * Never memoized: commands (which also move the epoch, as in [[sql]]) and
+    * Never memoized: commands (which move the epoch as in [[sql]]) and
     * plans that are not [[storable]]. The caller keeps transaction-local
     * resolution out: a session with staged transaction tables does not
     * come here.
@@ -583,7 +606,7 @@ object PlanCache {
     else {
       val df = build
       val analyzed = df.queryExecution.analyzed
-      if (isCommand(analyzed)) { bump(); df }
+      if (isCommand(analyzed)) { if (movesEpoch(analyzed)) bump(); df }
       else if (!storable(analyzed)) df
       else {
         val optimized = df.queryExecution.optimizedPlan

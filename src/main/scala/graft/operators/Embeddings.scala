@@ -165,7 +165,7 @@ object Embeddings {
     * index's candidate cost and the set whose exact-verification defines
     * recall. Grouped pair generation ([[TextPipeline.groupedPairs]]), not
     * the r15-r18 bucket self-join (r18, same lever as the minhash bandPairs
-    * rewrite; R18LshPairsAb, interleaved through PlanCache.count, candidate
+    * rewrite; OPTIMIZATION_r18.md, interleaved through PlanCache.count, candidate
     * multisets asserted identical): at the materialized sf1 the grouped form
     * wins 7/7 rounds, median 0.574 s vs 0.785/0.769 (−26%); at sf0.1 it
     * loses ~15% (0.391 vs 0.334) because AQE BROADCASTS the 52k-row bucket

@@ -112,7 +112,7 @@ object Relational {
       val lineitem = t(s, d, "lineitem").filter(col("l_shipdate") > ts("1997-01-01T00:00"))
       // Fact joins fact by SHUFFLE: without the hint the planner broadcasts
       // the (column-pruned) LINEITEM scan — a 300k-row single-threaded
-      // driver hash build per execution (DriverHotspots: LongToUnsafeRowMap
+      // driver hash build per execution (round 7: LongToUnsafeRowMap
       // .append dominated the repeated-count path; 120 ms/call at sf0.1) —
       // and broadcasting a fact is exactly what cannot scale. The hint on
       // the LEFT makes the smaller, filtered customer*orders side the

@@ -269,7 +269,8 @@ object SpatialJoin {
     // pi * 1.2^2 * k ~ 4.5k (Poisson tail below k is ~1e-8 at k=8), while
     // the 3x3-cell join processes 9 * 1.44 * k ~ 13k rows per point —
     // raising the factor to 1.5 measured 2.25x more shuffle for starvation
-    // probability that was already negligible (KnnScaleProbe).
+    // probability that was already negligible (round 13; ARCHITECTURE.md
+    // at 7f0c93f).
     val r0 = initRadius.getOrElse(
       math.min(math.max(1.2 * math.sqrt(k * area / n), 1e-9), math.max(diag, 1e-9)))
     val maxR = math.max(diag, 1e-9)
@@ -312,7 +313,7 @@ object SpatialJoin {
       // (localCheckpoint): the loop's next-remainder anti-join AND the
       // final result both read these blocks. Without the cut, round N's
       // lineage re-executes every earlier round's radius join — measured
-      // superlinear at 30x (KnnScaleProbe: 93 s vs 70 s linear) before the
+      // superlinear at 30x (round 13: 93 s vs 70 s linear) before the
       // checkpoint landed. Total pinned bytes across rounds are bounded by
       // |left| * k result rows (solved id_a sets are disjoint) plus the
       // geometrically shrinking remainders, which are freed eagerly below.

@@ -75,7 +75,7 @@ object TextPipeline {
     *
     * r18 measured-and-rejected (guide §1.1): replacing dropDuplicates +
     * window with ONE collect_set aggregate + explode (`n` = array size, no
-    * sort anywhere) is a wash — R18JaccardAb interleaved medians 0.751 s
+    * sort anywhere) is a wash — OPTIMIZATION_r18.md interleaved medians 0.751 s
     * (this shape) vs 0.759 s (agg+explode) over the full gated jaccard; the
     * array build + re-explode costs what the sort saved. Likewise the
     * gram-side df as groupBy(gram)+collect_list+explode: 0.84 s, an 11%
@@ -120,10 +120,11 @@ object TextPipeline {
   /** Batch form with the hot branch GATED on a measured df sketch (VERDICT
     * r10 #6): the static union below schedules the salted exchanges even
     * when no gram exceeds the cap — empty stages that measured ~0.18 s
-    * flat tax at sf0.1 (JaccardShapes: e_cold_only 0.70 s vs c_split_mat
-    * 0.87 s, same window). Here the gram index (post df>=2 filter) is
-    * pinned ONCE with an eager localCheckpoint — which preserves the
-    * window exchange's hash(gram) clustering, so it doubles as the
+    * flat tax at sf0.1 (round 11: e_cold_only 0.70 s vs c_split_mat 0.87 s,
+    * same window; ARCHITECTURE.md at 7f0c93f). Here the gram index (post
+    * df>=2 filter) is pinned ONCE with an eager localCheckpoint — which
+    * preserves the window exchange's hash(gram) clustering, so it doubles as
+    * the
     * materialization point the static form bought with an extra
     * repartition — and `max(df) > cap` is probed from the pinned blocks
     * (a block scan, ~ms; no recompute). Benign corpora then run ONLY the
@@ -168,7 +169,7 @@ object TextPipeline {
     // max(df) rides the checkpoint job as an Observation instead of a
     // separate `isEmpty` probe job (r17): on benign corpora the old take(1)
     // probe scanned every pinned block across escalating job waves —
-    // measured 150-275 ms of the per-call wall (R17JaccardPhases) for a
+    // measured 150-275 ms of the per-call wall (OPTIMIZATION_r17.md) for a
     // fact the checkpoint's own pass already touches. CollectMetrics is
     // safe HERE because the eager checkpoint consumes the whole observed
     // subtree — unlike the r11-rejected join-side Observation, which never
@@ -176,7 +177,7 @@ object TextPipeline {
     //
     // Document frequency stays a WINDOW count over the gram clustering —
     // a groupBy(gram) aggregate carrying the doc list as collect_list was
-    // measured SLOWER here (R18JaccardAb, interleaved: df-agg variants
+    // measured SLOWER here (OPTIMIZATION_r18.md, interleaved: df-agg variants
     // 1.33/1.37 s vs window 1.29/1.20 s medians — the struct collect +
     // re-explode costs more than the sort it saves) and its per-group array
     // state cannot spill, where the window's partition buffer can.
@@ -534,7 +535,7 @@ object TextPipeline {
     * doc emits exactly one row per band), so the sorted list's strictly-later
     * pairs are exactly the join's `a.doc_id < b.doc_id` pairs, and the
     * trailing distinct dedups cross-band repeats identically. Measured r18
-    * (R18MinhashAb, interleaved same-window through PlanCache.count — the
+    * (OPTIMIZATION_r18.md, interleaved same-window through PlanCache.count — the
     * bench path): at ~sf1 this wins EVERY clean round, median 0.843 s vs
     * 1.045 s shipped (-19%); at sf0.1 a wash (0.420 vs 0.433 s). The
     * self-join scanned the bucket exchange twice and re-shuffled C(k,2)
@@ -742,7 +743,7 @@ object TextPipeline {
     // bands x gram-array bytes, and the self-join read it twice
     // (ReusedExchange) then pushed both members' arrays through the join
     // output, where the grouped form reads it once and emits each group's
-    // strictly-later pairs directly. Measured (R18CleanPairsAb, interleaved
+    // strictly-later pairs directly. Measured (OPTIMIZATION_r18.md, interleaved
     // same-window through PlanCache.count, whole pipeline): sf0.1 median
     // 0.522 s vs 0.630 join / 0.619 shipped (wins 9/9 rounds); materialized
     // sf1 0.879 s vs 1.104 / 1.057 (wins 7/7). Equivalence: within a bucket
@@ -1074,10 +1075,10 @@ object TextPipeline {
         .orderBy("source", "doc_id")
     },
 
-    // The PUBLIC default is the lazy static union (r11 ADVICE: no eager
-    // jobs from a default overload); this op EXPLICITLY opts into the gated
-    // shape — the r12 same-window interleaved A/B (JaccardShapes, 5 rounds)
-    // read gated 0.754 s vs static 0.826 s median, confirming r11's
+    // The PUBLIC default is the lazy static union (r11 ADVICE: no eager jobs
+    // from a default overload); this op EXPLICITLY opts into the gated shape
+    // — the r12 same-window interleaved A/B (5 rounds; ARCHITECTURE.md at
+    // 7f0c93f) read gated 0.754 s vs static 0.826 s median, confirming r11's
     // in-window direction; the cross-round official regression was window
     // noise (the banked protocol's known host asymmetry). Op.eager: the
     // gated probe runs jobs at build time, so the instance must not be

@@ -47,9 +47,10 @@ object TpchSuite {
 
     // SHUFFLE_MERGE(lineitem): fact joins fact by shuffle — the unhinted
     // plan broadcast the column-pruned LINEITEM scan (600k-row
-    // single-threaded driver hash build per execution, the DriverHotspots
-    // finding; ~150 ms/call at sf0.1) which also cannot scale. Sort-merge
-    // keeps both fact sides streaming with no per-partition hash build —
+    // single-threaded driver hash build per execution, a round-7
+    // driver-sampling finding; ~150 ms/call at sf0.1) which also cannot
+    // scale. Sort-merge keeps both fact sides streaming with no
+    // per-partition hash build —
     // the 100 TB-safe strategy regardless of which side is bigger. DuckDB
     // reads the hint as a plain block comment, so one template serves both
     // engines.
@@ -116,8 +117,9 @@ object TpchSuite {
     // (lineitem and orders) as driver-side hash builds. Hinting orders —
     // the smaller fact at every scale — makes lineitem*orders a shuffled
     // hash join building the smaller side per partition in parallel, the
-    // textbook SHJ choice. Probed −107 ms/call at sf0.1 (HintProbe,
-    // static-path A/B); dims (part, supplier, nation) stay broadcast.
+    // textbook SHJ choice. Probed −107 ms/call at sf0.1 (round 7,
+    // static-path A/B; ARCHITECTURE.md at 7f0c93f); dims (part, supplier,
+    // nation) stay broadcast.
     both("tpch_h09",
       "SELECT /*+ SHUFFLE_HASH(orders) */ n_name, CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS o_year, " +
       s"CAST(ROUND(SUM(${Money.SqlRev}),2) AS DOUBLE) AS profit " +
@@ -174,7 +176,8 @@ object TpchSuite {
       // per execution — the fact-broadcast pathology) because the tiny
       // filtered side's post-agg cardinality is invisible to static
       // estimates. SHJ builds the small side per partition in parallel;
-      // orders streams. Probed -59 ms at sf0.1 (BuildSideProbe).
+      // orders streams. Probed -59 ms at sf0.1 (round 7; ARCHITECTURE.md
+      // at 7f0c93f).
       qty.hint("shuffle_hash")
         .join(s.table("orders").select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"),
           col("l_orderkey") === col("o_orderkey"))

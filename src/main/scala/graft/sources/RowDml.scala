@@ -194,7 +194,8 @@ object RowDml {
     * affected partitions. The previous broadcast-semi-join shape kept the
     * plan fully lazy but could not prune the scan: the post-image read paid
     * a full-table pass however few partitions the statement touched
-    * (DmlScaleProbe: a 1-of-64-partition UPDATE read all 64).
+    * (round 11: a 1-of-64-partition UPDATE read all 64; ARCHITECTURE.md
+    * at 7f0c93f).
     */
   private def affectedPartitionsPredicate(spark: SparkSession, df: DataFrame,
       cond: Column, parts: Seq[String]): Column =

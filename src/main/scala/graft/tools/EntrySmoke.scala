@@ -1,8 +1,8 @@
 package graft.tools
 
-/** Driver-contract smoke: `SparkEntry.entry` must return rows and `Bench`'s
-  * JSON line must parse — the two things the round driver gates on before
-  * anything else.
+/** Driver-contract smoke: `SparkEntry.entry` must return at least one row.
+  *
+  * Run: sbt "runMain graft.tools.EntrySmoke"
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {

@@ -3,8 +3,8 @@ package graft.engine
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkTestHarness, Tables}
 
-/** The DuckDB-idiom battery (graft.tools.DialectProbe's list) as a
-  * regression gate: every statement a DuckDB user is likely to type must
+/** The DuckDB-idiom battery (39 statements, first run as a round-8 probe)
+  * as a regression gate: every statement a DuckDB user is likely to type must
   * keep executing through the FULL engine statement pipeline — dialect
   * rewrites, macros, guard — as the rewrite stages evolve.
   */

@@ -49,6 +49,20 @@ class PlanCacheSpec extends AnyFunSuite {
     assert(!(a eq b))
   }
 
+  test("read-only EXPLAIN, DESCRIBE and SHOW leave every session's cached plans alone") {
+    val a = spark.newSession()
+    val b = spark.newSession()
+    a.sql("CREATE OR REPLACE TEMPORARY VIEW pc_ro AS SELECT 1 AS x")
+    val before = PlanCache.sql(b, "SELECT 'ro' AS v")
+    Seq("EXPLAIN SELECT 'ro' AS v", "SHOW TABLES", "DESCRIBE TABLE pc_ro",
+      "DESCRIBE pc_ro x", "SHOW COLUMNS IN pc_ro").foreach { q =>
+      PlanCache.sql(a, q).collect()
+      assert(PlanCache.sql(b, "SELECT 'ro' AS v") eq before, s"$q flushed another session")
+    }
+    PlanCache.sql(a, "SET spark.sql.shuffle.partitions=7")
+    assert(!(PlanCache.sql(b, "SELECT 'ro' AS v") eq before), "SET still moves the epoch")
+  }
+
   test("the count memo is bounded like the other stores") {
     val s = spark.newSession()
     var builds = 0

@@ -75,61 +75,17 @@ python3 tools/comparator.py "$SF_DIR" "$ORACLE" >/dev/null
 A2_TOTAL=$(python3 -c "import json;print(json.load(open('tools/comparator_${SF_NAME}.json'))['total'])")
 
 B_TOTAL=$(python3 -c "import json;print(json.load(open('tools/bench_last.json'))['value'])")
-# Drift gate first; then KEEP-BEST against the stateful best-pair sidecar
-# (tools/bench_best.json + comparator_best) instead of transient .bak
-# files — the .bak dance silently banked a Spark-phase-contended 3.74x
-# pair over a 1.75x one on 2026-08-15 and left nothing to debug, because
-# success deletes the .baks. The sidecar survives every run: a drift-clean
-# pair REPLACES bench_last only if its ratio (vs max(A,A') — a spike that
-# only shows in A' almost certainly overlapped B) beats the best ratio so
-# far; otherwise the best pair is restored into bench_last. Host-speed is
-# deliberately NOT a criterion: both engines slow proportionally under
-# host capping, so a better ratio from a slower host is a conservative
-# claim (the r7 host-speed keep-best pinned a stale 2.16x pair forever).
-# Code fingerprint: keep-best only compares pairs measured on the SAME code
-# (ADVICE r9: an all-time-best sidecar that survives code changes would
-# silently discard a pair that regressed BECAUSE of a code change and pin
-# bench_last to a stale measurement of older code). Hashed from the COMPILED
-# CLASSES the java -cp invocation above actually executed — not the git
-# sources (ADVICE r10: with stale target/ classes, two runs could share a
-# source fingerprint while measuring different binaries).
-CODE_SHA=$(find target/scala-2.13/classes -name '*.class' -print0 2>/dev/null \
-  | sort -z | xargs -0 md5sum 2>/dev/null | md5sum | cut -d' ' -f1)
-
-if python3 - "$A_TOTAL" "$A2_TOTAL" "$B_TOTAL" "$SF_NAME" "$CODE_SHA" <<'EOF'
-import json, shutil, sys
+# Drift gate: a drift-clean pair is banked as measured (the latest clean
+# window, never a best-of selection); a noisy one restores the previous pair.
+if python3 - "$A_TOTAL" "$A2_TOTAL" "$B_TOTAL" <<'EOF'
+import sys
 a, a2, b = map(float, sys.argv[1:4])
-sf = sys.argv[4]
-code_sha = sys.argv[5]
 drift = abs(a - a2) / min(a, a2)
 ratio = b / max(a, a2)
 print(f"duckdb A={a:.3f}s A'={a2:.3f}s (drift {drift*100:.1f}%)  spark B={b:.3f}s  ratio(vs max)={ratio:.2f}x")
 if drift > 0.10:
     print("WINDOW NOISY (comparator drifted >10%) — artifacts restored, rerun", file=sys.stderr)
     sys.exit(3)
-best_p, cbest_p = "tools/bench_best.json", f"tools/comparator_{sf}_best.json"
-try:
-    bb = json.load(open(best_p))
-    best_ratio = bb["value"] / max(bb["comparator"]["total"],
-        json.load(open(cbest_p))["total"])
-    if bb.get("code_sha") != code_sha:
-        best_ratio = None  # stale: measured on different code — must not gate HEAD
-except Exception:
-    best_ratio = None
-if best_ratio is None or ratio < best_ratio:
-    cur = json.load(open("tools/bench_last.json"))
-    cur["code_sha"] = code_sha
-    json.dump(cur, open(best_p, "w"))
-    shutil.copy(f"tools/comparator_{sf}.json", cbest_p)
-    print(f"NEW BEST ratio {ratio:.2f}x banked (was {best_ratio and f'{best_ratio:.2f}x' or 'none/stale'})")
-else:
-    # restore the best pair into the banked slot; keep this window aside
-    shutil.copy("tools/bench_last.json", "tools/bench_last_noisy.json")
-    shutil.copy(f"tools/comparator_{sf}.json", f"tools/comparator_{sf}_noisy.json")
-    shutil.copy(best_p, "tools/bench_last.json")
-    shutil.copy(cbest_p, f"tools/comparator_{sf}.json")
-    print(f"ratio {ratio:.2f}x does not beat best {best_ratio:.2f}x — best pair restored into bench_last")
-sys.exit(0)
 EOF
 then
   rm -f "tools/bench_last.json.bak" "tools/comparator_${SF_NAME}.json.bak"
