@@ -74,8 +74,8 @@ object Bench {
     spark.table("lineitem").count()
     // Bench times the repeated-prepared-statement path (PlanCache.count):
     // fresh physical plan + full execution per call, no per-call
-    // re-optimization, AQE bypass where the shape qualifies — the same
-    // latency profile the server's re-executed statements get.
+    // re-optimization, a static plan when the file-scan input is small —
+    // the same latency profile the server's re-executed statements get.
     val queries = SparkEntry.countQueries
     // Adaptive warm-up: keep running full passes until the pass total stops
     // improving (>10% pass-over-pass), so the timed passes measure steady

@@ -53,8 +53,8 @@ object SparkEntry {
   /** COUNT(*)-action per operator through the plan cache's repeated-action
     * path ([[graft.engine.PlanCache.count]]): each call executes the FULL
     * query on a fresh physical plan (fresh shuffle dependencies — no work
-    * reuse across calls) but skips per-call re-optimization and, for
-    * statically-pinned shapes, the adaptive stage rounds. This is the
+    * reuse across calls) but skips per-call re-optimization and, for plans
+    * over small file-scan inputs, the adaptive stage rounds. This is the
     * latency profile a repeated prepared statement gets on the server wire
     * path; the bench times it. Side-effecting operators fall back to a
     * plain rebuild + count.

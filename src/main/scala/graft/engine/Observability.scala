@@ -3,8 +3,6 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 /** Query instrumentation, re-implementing the reference's observability layer
   * (`/root/reference/src/common/gizmosql_telemetry.cpp` metrics,
@@ -13,9 +11,12 @@ import scala.jdk.CollectionConverters._
   * Spark's native hooks: a `QueryExecutionListener` records per-statement
   * rows/duration/status, and profile capture stores the executed physical
   * plan (`df.queryExecution`) when `gizmosql.capture_query_profile` is on.
+  * Memory stays bounded however long the server runs: only the newest
+  * `Observability.Capacity` records are kept, next to cumulative totals.
   */
 final class Observability(captureProfile: () => Boolean,
     tagFor: SparkSession => String = _ => "") extends QueryExecutionListener {
+  import Observability.Capacity
 
   final case class QueryRecord(
       name: String, durationNs: Long, status: String,
@@ -23,7 +24,24 @@ final class Observability(captureProfile: () => Boolean,
       tag: String = "",
       completedAtMs: Long = System.currentTimeMillis())
 
-  private val records = new ConcurrentLinkedQueue[QueryRecord]()
+  // The newest `Capacity` records in a ring: record number i sits in slot
+  // i % Capacity. `next` numbers every record ever added (readers keep it
+  // as a cursor); `floor` is where `clear` cut the history. The totals
+  // count every record, dropped ones included.
+  private val ring = new Array[QueryRecord](Capacity)
+  private var next = 0L
+  private var floor = 0L
+  private var errors = 0L
+  private var rows = 0L
+  private var nanos = 0L
+
+  private def add(r: QueryRecord): Unit = synchronized {
+    ring((next % Capacity).toInt) = r
+    next += 1
+    if (r.status.startsWith("error")) errors += 1
+    rows += r.outputRows.getOrElse(0L)
+    nanos += r.durationNs
+  }
 
   /** Redact literals from logged SQL, as the reference's logger does. */
   def redact(sql: String): String = Observability.redact(sql)
@@ -31,16 +49,31 @@ final class Observability(captureProfile: () => Boolean,
   override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
     val rows = qe.executedPlan.metrics.get("numOutputRows").map(_.value)
     val profile = if (captureProfile()) Some(qe.executedPlan.toString) else None
-    records.add(QueryRecord(funcName, durationNs, "success", rows, profile,
+    add(QueryRecord(funcName, durationNs, "success", rows, profile,
       tagFor(qe.sparkSession)))
   }
 
   override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit =
-    records.add(QueryRecord(funcName, 0L, s"error: ${error.getMessage}", None, None,
+    add(QueryRecord(funcName, 0L, s"error: ${error.getMessage}", None, None,
       tagFor(qe.sparkSession)))
 
-  def snapshot: Seq[QueryRecord] = records.asScala.toSeq
-  def clear(): Unit = records.clear()
+  /** The retained records numbered `from` on, oldest first, and the number
+    * the next record will get — the cursor for the following call.
+    */
+  def since(from: Long): (Seq[QueryRecord], Long) = synchronized {
+    val first = math.max(math.max(from, floor), next - Capacity)
+    ((first until next).map(i => ring((i % Capacity).toInt)), next)
+  }
+
+  /** The newest `n` retained records, oldest first. */
+  def recent(n: Int): Seq[QueryRecord] = synchronized { since(next - n)._1 }
+
+  def snapshot: Seq[QueryRecord] = since(0L)._1
+
+  /** Every record ever added: (statements, errors, output rows, duration ns). */
+  def totals: (Long, Long, Long, Long) = synchronized { (next, errors, rows, nanos) }
+
+  def clear(): Unit = synchronized { floor = next }
 
   def install(spark: SparkSession): this.type = {
     spark.listenerManager.register(this)
@@ -72,6 +105,9 @@ final class Observability(captureProfile: () => Boolean,
 }
 
 object Observability {
+  /** Records kept for `/metrics`, the statements view and the OTLP spans. */
+  val Capacity = 1000
+
   /** Redact literals from logged SQL, as the reference's logger does —
     * shared by the listener records and the query log. */
   def redact(sql: String): String =

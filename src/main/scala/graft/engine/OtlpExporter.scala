@@ -25,7 +25,9 @@ import java.util.concurrent.ThreadLocalRandom
   *
   * Metrics are cumulative monotonic sums over every recorded statement
   * (statements, errors, output rows, total duration); each flush also
-  * exports one span per statement recorded since the previous flush.
+  * exports one span per statement recorded since the previous flush and
+  * still held in the bounded record history (the metrics count the
+  * records it dropped as well).
   */
 final class OtlpExporter(obs: Observability, endpoint: String, serviceName: String,
     headers: Map[String, String] = Map.empty, environment: Option[String] = None) {
@@ -35,14 +37,7 @@ final class OtlpExporter(obs: Observability, endpoint: String, serviceName: Stri
   private val client = HttpClient.newBuilder()
     .connectTimeout(java.time.Duration.ofSeconds(5)).build()
   private val startNano = System.currentTimeMillis() * 1000000L
-  private var exported = 0 // record cursor into obs.snapshot
-  // Cumulative counters maintained incrementally: a long-lived server's
-  // record history is unbounded, and re-summing it every flush would make
-  // the 60 s flush O(total statements ever).
-  private var nStatements = 0L
-  private var nErrors = 0L
-  private var nRows = 0L
-  private var nsDuration = 0L
+  private var exported = 0L // record-number cursor into obs.since
 
   private def esc(s: String): String =
     s.flatMap {
@@ -67,6 +62,7 @@ final class OtlpExporter(obs: Observability, endpoint: String, serviceName: Stri
       s""""timeUnixNano":"$now","asInt":"$value"}]}}"""
 
   private def metricsJson(now: Long): String = {
+    val (nStatements, nErrors, nRows, nsDuration) = obs.totals
     val metrics = Seq(
       sumMetric("gizmosql.statements", "1", nStatements, now),
       sumMetric("gizmosql.statement.errors", "1", nErrors, now),
@@ -108,15 +104,8 @@ final class OtlpExporter(obs: Observability, endpoint: String, serviceName: Stri
     * previous flush. Safe to call from a timer thread and from shutdown.
     */
   def flush(): Unit = synchronized {
-    val all = obs.snapshot
-    val fresh = all.drop(exported)
-    exported = all.size
-    fresh.foreach { r =>
-      nStatements += 1
-      if (r.status.startsWith("error")) nErrors += 1
-      nRows += r.outputRows.getOrElse(0L)
-      nsDuration += r.durationNs
-    }
+    val (fresh, cursor) = obs.since(exported)
+    exported = cursor
     val now = System.currentTimeMillis() * 1000000L
     post("/v1/metrics", metricsJson(now))
     if (fresh.nonEmpty) post("/v1/traces", tracesJson(fresh))

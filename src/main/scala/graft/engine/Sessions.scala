@@ -92,7 +92,8 @@ final class SessionState(
     }
 
   /** Run a prepared statement through [[PlanCache.prepared]]: queries reuse
-    * their optimized plan and static pin per parameter values; commands run
+    * their optimized plan per parameter values, pinned static when their
+    * file-scan input is small; commands run
     * unmemoized and move the mutation epoch. While this session's
     * transaction has staged tables, queries run unmemoized — the rule
     * `Statement.create` applies to direct SQL.

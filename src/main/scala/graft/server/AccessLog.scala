@@ -23,10 +23,12 @@ final class AccessLog(capacity: Int = 1000) {
   import AccessLog.Entry
 
   private val entries = new ConcurrentLinkedQueue[Entry]()
+  // ConcurrentLinkedQueue.size walks the whole queue; count alongside it.
+  private val count = new java.util.concurrent.atomic.AtomicInteger()
 
   def record(e: Entry): Unit = {
     entries.add(e)
-    while (entries.size > capacity) entries.poll()
+    if (count.incrementAndGet() > capacity && entries.poll() != null) count.decrementAndGet()
   }
 
   def snapshot: Seq[Entry] = entries.asScala.toSeq

@@ -715,7 +715,7 @@ final class GraftHttpServer(
       case Right(id) if id.role != "admin" =>
         (403, "application/json", jsonError("metrics require role admin"))
       case Right(_) =>
-        val recent = observability.snapshot.takeRight(100)
+        val recent = observability.recent(100)
         val items = recent.map { r =>
           s"""{"name":${quote(r.name)},"duration_ms":${r.durationNs / 1000000},""" +
             s""""status":${quote(r.status)},"output_rows":${r.outputRows.getOrElse(-1L)}}"""

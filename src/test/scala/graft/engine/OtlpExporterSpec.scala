@@ -85,6 +85,32 @@ class OtlpExporterSpec extends AnyFunSuite {
     } finally collector.stop()
   }
 
+  test("the record history is a bounded ring; each retained record exports once") {
+    val collector = new Collector
+    try {
+      val obs = new Observability(() => false)
+      val qe = spark.range(1).queryExecution
+      val exporter = new OtlpExporter(obs, collector.endpoint, "graft-test")
+      (1 to 3).foreach(i => obs.onSuccess(s"a$i", qe, 1000L))
+      exporter.flush()
+      // capacity + 5 more: the oldest five of them drop before the next flush
+      val n = Observability.Capacity + 5
+      (1 to n).foreach(i => obs.onSuccess(s"b$i", qe, 1000L))
+      val retained = (6 to n).map(i => s"b$i")
+      assert(obs.snapshot.map(_.name) == retained)
+      assert(obs.recent(3).map(_.name) == retained.takeRight(3))
+      exporter.flush()
+      exporter.flush()
+      val spans = collector.traceBodies.flatMap(
+        """"name":"([ab]\d+)"""".r.findAllMatchIn(_).map(_.group(1)))
+      assert(spans.sorted == (Seq("a1", "a2", "a3") ++ retained).sorted)
+      // the cumulative metrics still count the dropped records
+      val statements = """"gizmosql\.statements".*?"asInt":"(\d+)"""".r
+      assert(statements.findFirstMatchIn(collector.metricBodies.head).map(_.group(1))
+        .contains((3 + n).toString))
+    } finally collector.stop()
+  }
+
   test("export failures never propagate (unreachable endpoint)") {
     val obs = recordedObservability()
     val exporter = new OtlpExporter(obs, "http://127.0.0.1:1", "graft-test")

@@ -2,13 +2,13 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.GraftSession
+import graft.SparkTestHarness
 
 /** Prepared-plan cache contract: pure repeats reuse the plan, commands
   * bypass and flush, sessions are isolated.
   */
 class PlanCacheSpec extends AnyFunSuite {
-  private lazy val spark: SparkSession = GraftSession.local()
+  private lazy val spark: SparkSession = SparkTestHarness.spark
 
   test("repeated pure statements reuse the analyzed DataFrame") {
     val s = spark.newSession()
@@ -98,7 +98,7 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("broadcast-only plans pin a static plan; shuffled-join plans stay adaptive") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val s = GraftSession.local().newSession()
+    val s = spark.newSession()
     graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
     // All joins broadcast (leaf dims under the threshold) => static plan.
     val bcast = PlanCache.sql(s,
@@ -131,9 +131,28 @@ class PlanCacheSpec extends AnyFunSuite {
     }
   }
 
+  test("a plan over the size bound or over a non-file leaf stays on the live session, adaptive") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val s = spark.newSession()
+    graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
+    def liveAdaptive(q: String): Unit = {
+      val df = PlanCache.sql(s, q)
+      assert(df.sparkSession eq s, s"rooted on a clone: $q")
+      assert(df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec],
+        s"expected adaptive execution for $q:\n${df.queryExecution.executedPlan}")
+      assert(df.count() > 0)
+    }
+    // A broadcast-only join over file scans, beyond a 0-byte bound.
+    s.conf.set("spark.graft.planCache.staticMaxInputBytes", "0")
+    try liveAdaptive("SELECT n_name, r_name FROM nation JOIN region ON n_regionkey = r_regionkey")
+    finally s.conf.unset("spark.graft.planCache.staticMaxInputBytes")
+    // A range leaf is not a file scan, whatever its size.
+    liveAdaptive("SELECT n_name FROM range(10) r JOIN nation ON r.id = n_nationkey")
+  }
+
   test("broadcast-join-chain builds pin static under the size bound; pre-shuffled builds stay adaptive") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val s = GraftSession.local().newSession()
+    val s = spark.newSession()
     graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
     // r17 relaxation: a broadcast build whose subtree is itself a pure
     // broadcast-join chain (dimension pre-reduction, the h05/h07 star
@@ -169,7 +188,7 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("small-input pin boundary: agg must TOP a shuffle-fed build; generator builds stay blocked") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val s = GraftSession.local().newSession()
+    val s = spark.newSession()
     graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
     // r17 ADVICE: under the small-input bound the r17 rule admitted any
     // shuffle-fed build with an aggregate ANYWHERE below — including one
@@ -202,11 +221,9 @@ class PlanCacheSpec extends AnyFunSuite {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
       PlanCache.bump()
     }
-    // Generator-bearing (explode) broadcast build: blocked both by the
-    // plan-wide rowMultiplier gate and by the explicit generator arm of the
-    // derived-build rule (r17 verdict #7 — the belt-and-braces arm exists so
-    // a future rowMultiplier edit cannot silently widen the small-input
-    // allowance to exploded builds).
+    // Generator-bearing (explode) broadcast build: blocked by the plan-wide
+    // row-multiplier gate, so a change to that gate cannot silently widen
+    // the small-input allowance to exploded builds.
     val genBuild = PlanCache.sql(s,
       "SELECT /*+ BROADCAST(t) */ COUNT(*) AS c FROM part JOIN " +
       "(SELECT explode(split(r_name, ' ')) AS w FROM region) t " +
@@ -218,7 +235,7 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("row-multiplying plans never take the small-input static pin") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val s = GraftSession.local().newSession()
+    val s = spark.newSession()
     graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -250,7 +267,7 @@ class PlanCacheSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-    val s = GraftSession.local().newSession()
+    val s = spark.newSession()
     graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
     assert(s.table("supplier").count() <= 100, "build side must stay a tiny dimension")
     // The tpch_h05 build: supplier keyed on (s_suppkey BIGINT, s_nationkey
@@ -278,7 +295,7 @@ class PlanCacheSpec extends AnyFunSuite {
   test("static-plan probe never leaks into concurrent planning in the same session") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-    val s = GraftSession.local().newSession()
+    val s = spark.newSession()
     graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
     // One thread hammers prepare() (whose probe plans adaptive-off); the
     // other keeps planning fresh statements on the live session. With the
@@ -317,7 +334,7 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("count path returns the same value as count() and re-executes full work per call") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    val s = GraftSession.local().newSession()
+    val s = spark.newSession()
     graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
     val q = "SELECT o_orderpriority, COUNT(*) AS c FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY o_orderpriority"
     val expected = s.sql(q).count()
@@ -412,7 +429,7 @@ class PlanCacheSpec extends AnyFunSuite {
 
   test("a cached static-pinned ORDER BY result is fetched in one Spark job") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val s = GraftSession.local().newSession()
+    val s = spark.newSession()
     graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
     val df = PlanCache.sql(s, "SELECT n_nationkey, n_name FROM nation ORDER BY n_name")
     val plan = df.queryExecution.executedPlan
