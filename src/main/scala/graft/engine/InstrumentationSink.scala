@@ -72,6 +72,9 @@ final class InstrumentationSink(
   }
 
   private val queue = new LinkedBlockingQueue[(String, Row)](maxQueueDepth)
+  // rows enqueued and not yet landed (or given up on): the queued ones plus
+  // the batch the writer has taken — what `flush` waits for
+  private val pending = new AtomicLong(0)
   private val dropped = new AtomicLong(0)
   private val insertFailed = new AtomicLong(0)
   @volatile private var shutdownRequested = false
@@ -83,7 +86,8 @@ final class InstrumentationSink(
     if (shutdownRequested) return
     val schema = Tables(table)
     val row = Row.fromSeq(schema.fields.map(f => values.getOrElse(f.name, null)).toIndexedSeq)
-    if (!queue.offer(table -> row)) { dropped.incrementAndGet(); () }
+    pending.incrementAndGet()
+    if (!queue.offer(table -> row)) { pending.decrementAndGet(); dropped.incrementAndGet(); () }
   }
 
   // ---- typed emitters (the reference's record classes,
@@ -149,6 +153,19 @@ final class InstrumentationSink(
       "created_date" -> new java.sql.Date(t)))
   }
 
+  /** One recorded statement execution (the server's statement record):
+    * its `sql_executions` row, preceded by its `sql_statements` row when
+    * the statement was not prepared beforehand (`/sql`; `/prepare` writes
+    * a prepared statement's row once).
+    */
+  def record(r: Observability.StatementRecord, withStatement: Boolean): Unit = {
+    if (withStatement)
+      statement(r.statementId, r.sessionId, r.sql, r.operation, isInternal = false,
+        prepareError = "", queryTag = r.tag)
+    execution(java.util.UUID.randomUUID().toString, r.statementId, r.status, r.error,
+      r.outputRows, r.startMs, r.endMs, r.profile)
+  }
+
   def execution(executionId: String, statementId: String, status: String,
       errorMessage: String, rowsFetched: Long, startMs: Long, endMs: Long,
       queryProfile: String): Unit =
@@ -178,9 +195,9 @@ final class InstrumentationSink(
         val batch = new java.util.ArrayList[(String, Row)](maxBatch)
         batch.add(first)
         queue.drainTo(batch, maxBatch - 1)
-        batch.asScala.toSeq.groupBy(_._1).foreach { case (table, rows) =>
+        try batch.asScala.toSeq.groupBy(_._1).foreach { case (table, rows) =>
           writeBatch(table, rows.map(_._2))
-        }
+        } finally { pending.addAndGet(-batch.size); () }
       }
     }
   }
@@ -216,9 +233,9 @@ final class InstrumentationSink(
     */
   def flush(timeoutMs: Long = 30000): Boolean = {
     val deadline = System.currentTimeMillis() + timeoutMs
-    while (!queue.isEmpty && System.currentTimeMillis() < deadline)
+    while (pending.get > 0 && System.currentTimeMillis() < deadline)
       Thread.sleep(50)
-    queue.isEmpty
+    pending.get == 0
   }
 
   override def close(): Unit = {

@@ -23,11 +23,13 @@ import java.util.concurrent.ThreadLocalRandom
   * take the server down (the reference's exporters drop on error the same
   * way).
   *
-  * Metrics are cumulative monotonic sums over every recorded statement
+  * Both read the server's statement records ([[Observability]]). Metrics
+  * are cumulative monotonic sums over every recorded statement
   * (statements, errors, output rows, total duration); each flush also
   * exports one span per statement recorded since the previous flush and
   * still held in the bounded record history (the metrics count the
-  * records it dropped as well).
+  * records it dropped as well): named by the statement's operation, with
+  * the rows streamed as an attribute.
   */
 final class OtlpExporter(obs: Observability, endpoint: String, serviceName: String,
     headers: Map[String, String] = Map.empty, environment: Option[String] = None) {
@@ -78,12 +80,13 @@ final class OtlpExporter(obs: Observability, endpoint: String, serviceName: Stri
     b.map(x => f"$x%02x").mkString
   }
 
-  private def tracesJson(rs: Seq[Observability#QueryRecord]): String = {
+  private def tracesJson(rs: Seq[Observability.StatementRecord]): String = {
     val spans = rs.map { r =>
       val code = if (r.status == "success") 1 else 2
-      val end = r.completedAtMs * 1000000L
-      s"""{"traceId":"${hex(16)}","spanId":"${hex(8)}","name":"${esc(r.name)}",""" +
-        s""""kind":2,"startTimeUnixNano":"${end - r.durationNs}","endTimeUnixNano":"$end",""" +
+      val start = r.startMs * 1000000L
+      s"""{"traceId":"${hex(16)}","spanId":"${hex(8)}","name":"${esc(r.operation)}",""" +
+        s""""kind":2,"startTimeUnixNano":"$start","endTimeUnixNano":"${start + r.durationNs}",""" +
+        s""""attributes":[{"key":"gizmosql.rows","value":{"intValue":"${r.outputRows}"}}],""" +
         s""""status":{"code":$code}}"""
     }
     s"""{"resourceSpans":[{"resource":$resourceJson,"scopeSpans":[{""" +

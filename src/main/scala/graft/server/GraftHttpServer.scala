@@ -141,16 +141,8 @@ final class GraftHttpServer(
   }
   val health = new Health(spark).start()
   val shutdown = new ShutdownState(gracePeriodSeconds = 10)
-  // spark-session -> engine-session reverse map, so the (async) query
-  // listener can stamp each record with ITS session's query_tag — the
-  // reference's sql_statements.query_tag contract. Weak keys: a closed
-  // session's SparkSession must not be pinned by instrumentation.
-  private val sparkToSession = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, SessionState]())
-  val observability = new Observability(() => false,
-    s => Option(sparkToSession.get(s))
-      .flatMap(_.settings.get("gizmosql.query_tag")).getOrElse("")).install(spark)
-  val accessLog = new AccessLog()
+  // one record per client statement, written by `runStatement`
+  val observability = new Observability
   // Catalog log sink (reference `gizmosql_library.cpp:973-995`): created
   // before any request can log, registered as a secondary GraftLog sink.
   val catalogLog: Option[graft.engine.CatalogLogSink] = catalogLogDir.map { d =>
@@ -299,7 +291,6 @@ final class GraftHttpServer(
   private val BytesKey = "graft.bytes"
   private val UserKey = "graft.user"
   private val DetailKey = "graft.detail"
-  private val RowsKey = "graft.rows"
 
   /** Decoded query parameters (last value wins on duplicates). */
   private def queryParams(ex: HttpExchange): Map[String, String] =
@@ -366,21 +357,20 @@ final class GraftHttpServer(
             status = 200
         }
       } finally {
-        val user = Option(ex.getAttribute(UserKey)).fold("-")(_.toString)
-        val detail = Option(ex.getAttribute(DetailKey)).fold("")(_.toString)
-        accessLog.record(AccessLog.Entry(
-          System.currentTimeMillis(), ex.getRequestMethod, ex.getRequestURI.getPath,
-          user, status, (System.nanoTime() - t0) / 1000000, bytes, detail))
-        // fork the same entry as a structured record (catalog log sink et al.)
-        if (graft.engine.GraftLog.sinkCount > 0)
-          graft.engine.GraftLog.log(graft.engine.GraftLog.LogRecord(
-            System.currentTimeMillis(),
+        // the access log (the reference's access_log_middleware.cpp): one
+        // structured `http` record per request, to the registered sinks
+        if (GraftLog.sinkCount > 0) {
+          val detail = Option(ex.getAttribute(DetailKey))
+            .fold("")(d => s""","detail":${quote(d.toString)}""")
+          GraftLog.log(GraftLog.LogRecord(System.currentTimeMillis(),
             if (status >= 500) "ERROR" else "INFO",
             s"${ex.getRequestMethod} ${ex.getRequestURI.getPath} $status",
-            component = "http", username = if (user == "-") "" else user,
+            component = "http", instanceId = instanceId,
+            username = Option(ex.getAttribute(UserKey)).fold("")(_.toString),
             peer = Option(ex.getRemoteAddress).fold("")(_.toString),
-            fieldsJson = if (detail.isEmpty) ""
-              else s"""{"detail":${quote(detail)}}"""))
+            fieldsJson = s"""{"status":$status,"duration_ms":${(System.nanoTime() - t0) / 1000000},""" +
+              s""""bytes":$bytes$detail}"""))
+        }
         ex.close()
       }
     }
@@ -391,9 +381,9 @@ final class GraftHttpServer(
     * the dataset's existing executed plan. Runs
     * inside the admission slot and the query-timeout worker, so a timeout or
     * kill interrupts the producing jobs mid-stream (the reference's
-    * cancel-during-DoGet semantics).
+    * cancel-during-DoGet semantics). Returns the rows streamed.
     */
-  private def streamResult(ex: HttpExchange, wantJson: Boolean, df: DataFrame): Resp = {
+  private def streamResult(ex: HttpExchange, wantJson: Boolean, df: DataFrame): Long = {
     val ct = if (wantJson) "application/json" else "application/vnd.apache.arrow.stream"
     ex.getResponseHeaders.set("Content-Type", ct)
     ex.setAttribute(HeadersSentKey, java.lang.Boolean.TRUE)
@@ -419,8 +409,7 @@ final class GraftHttpServer(
     } else rows = ArrowIO.writeArrowStream(df, os)
     os.flush()
     ex.setAttribute(BytesKey, count)
-    ex.setAttribute(RowsKey, rows)
-    Streamed
+    rows
   }
 
   private def jsonError(msg: String): Array[Byte] =
@@ -521,56 +510,61 @@ final class GraftHttpServer(
     withSession(ex) { (_, session) =>
       val sql = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8).trim
       if (sql.isEmpty) return (400, "application/json", jsonError("empty SQL body"))
-      val wantJson =
-        Option(ex.getRequestHeaders.getFirst("Accept")).exists(_.contains("application/json"))
-      ex.setAttribute(DetailKey, observability.redact(sql))
-      // instrumentation rows mirror the reference's StatementRecord +
-      // ExecutionRecord pair (instrumentation_records.h:102-158): the
-      // redacted SQL at create, the outcome + row count at completion
-      val stmtId = java.util.UUID.randomUUID().toString
-      val startMs = System.currentTimeMillis()
-      def record(status: String, error: String): Unit =
-        instrumentation.foreach { i =>
-          i.statement(stmtId, session.id, observability.redact(sql), "DoGetStatement",
-            isInternal = false, prepareError = if (status == "parse_error") error else "",
-            queryTag = session.settings.get("gizmosql.query_tag").getOrElse(""))
-          i.execution(java.util.UUID.randomUUID().toString, stmtId, status, error,
-            rowsFetched = Option(ex.getAttribute(RowsKey)).fold(-1L)(_.asInstanceOf[Long]),
-            startMs = startMs, endMs = System.currentTimeMillis(), queryProfile = "")
-        }
-      statementErrors {
-        try {
-          val df = Statement.create(sessions, session, global, sql)
-          val bypass = session.isAdmin &&
-            session.settings.get("gizmosql.bypass_queue").contains("true")
-          val resp = admission.withSlot(bypass, () => session.killRequested) {
-            Statement.executeWithTimeout(session, sessionTimeout(session)) {
-              streamResult(ex, wantJson, df)
-            }
-          }
-          record("success", null)
-          resp
-        } catch {
-          case e: TimeoutException => record("timeout", e.getMessage); throw e
-          case scala.util.control.NonFatal(e) => record("error", e.getMessage); throw e
-        }
+      runStatement(ex, session, "DoGetStatement", java.util.UUID.randomUUID().toString, sql,
+        withStatement = true)(Statement.create(sessions, session, global, sql))
+    }
+
+  /** The one statement path of `/sql` and `/execute`: `create` the result,
+    * run it in an admission slot on the timeout worker, stream it, then
+    * record the outcome once as an [[Observability.StatementRecord]] — kept
+    * by `observability` (read by /metrics and OTLP) and written to the
+    * instrumentation tables, with the `sql_statements` row only when
+    * `withStatement` (a prepared statement's row is written by /prepare).
+    */
+  private def runStatement(ex: HttpExchange, session: SessionState, operation: String,
+      statementId: String, sql: String, withStatement: Boolean)(create: => DataFrame): Resp = {
+    val redacted = Observability.redact(sql)
+    ex.setAttribute(DetailKey, redacted)
+    val wantJson =
+      Option(ex.getRequestHeaders.getFirst("Accept")).exists(_.contains("application/json"))
+    val startMs = System.currentTimeMillis()
+    val t0 = System.nanoTime()
+    def record(status: String, error: String, rows: Long, profile: String): Unit = {
+      val r = Observability.StatementRecord(statementId, session.id, operation, redacted,
+        status, error, rows, startMs, System.nanoTime() - t0,
+        session.settings.get("gizmosql.query_tag").getOrElse(""), profile)
+      observability.add(r)
+      instrumentation.foreach(_.record(r, withStatement))
+    }
+    try {
+      val df = create
+      val bypass = session.isAdmin &&
+        session.settings.get("gizmosql.bypass_queue").contains("true")
+      val timeout =
+        session.settings.get("gizmosql.query_timeout").flatMap(_.toLongOption).getOrElse(0L)
+      val rows = admission.withSlot(bypass, () => session.killRequested) {
+        Statement.executeWithTimeout(session, timeout)(streamResult(ex, wantJson, df))
       }
+      val profile =
+        if (session.settings.get("gizmosql.capture_query_profile").contains("true"))
+          df.queryExecution.executedPlan.toString
+        else ""
+      record("success", "", rows, profile)
+      Streamed
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        record(if (e.isInstanceOf[TimeoutException]) "timeout" else "error", e.getMessage, -1L, "")
+        val code = e match {
+          case _: SecurityException => 403
+          case _: IllegalArgumentException | _: org.apache.spark.sql.AnalysisException => 400
+          case _: TimeoutException => 408
+          // admission-queue rejection / wait timeout: retriable overload
+          case _: IllegalStateException => 503
+          case _ => throw e
+        }
+        (code, "application/json", jsonError(e.getMessage))
     }
-
-  private def sessionTimeout(session: SessionState): Long =
-    session.settings.get("gizmosql.query_timeout").flatMap(_.toLongOption).getOrElse(0L)
-
-  /** Shared HTTP status mapping for statement-shaped work. */
-  private def statementErrors(f: => Resp): Resp =
-    try f catch {
-      case e: SecurityException => (403, "application/json", jsonError(e.getMessage))
-      case e: IllegalArgumentException => (400, "application/json", jsonError(e.getMessage))
-      case e: TimeoutException => (408, "application/json", jsonError(e.getMessage))
-      case e: org.apache.spark.sql.AnalysisException =>
-        (400, "application/json", jsonError(e.getMessage))
-      // admission-queue rejection / wait timeout: retriable overload
-      case e: IllegalStateException => (503, "application/json", jsonError(e.getMessage))
-    }
+  }
 
   /** Session resolution + graceful-drain gating shared by the
     * statement-shaped endpoints.
@@ -589,10 +583,6 @@ final class GraftHttpServer(
                 onSessionCreate(session.spark)
                 Statement.registerPseudoFunctions(session, instanceId, clusterId,
                   sessions.license.editionName)
-                // each newSession() has its own listener manager; one shared
-                // Observability instance aggregates across all sessions
-                sparkToSession.put(session.spark, session)
-                observability.install(session.spark)
                 instrumentation.foreach(_.sessionStart(id.sessionId, instanceId,
                   id.username, id.role, authMethod = "bearer",
                   peer = Option(ex.getRemoteAddress).map(_.toString).getOrElse(""),
@@ -605,7 +595,8 @@ final class GraftHttpServer(
     }
 
   /** CreatePreparedStatement (`duckdb_server.cpp:1354-1409`): guard, then
-    * analysis-only schema; returns the server-side handle.
+    * analysis-only schema; returns the server-side handle, which is also the
+    * `sql_statements` key every `/execute` of it points at.
     */
   private def handlePrepare(ex: HttpExchange): Resp =
     withSession(ex) { (_, session) =>
@@ -617,6 +608,9 @@ final class GraftHttpServer(
           try {
             sessions.refreshManifest(session)
             val p = session.prepare(sql)
+            instrumentation.foreach(_.statement(p.handle, session.id, Observability.redact(sql),
+              "CreatePreparedStatement", isInternal = false, prepareError = "",
+              queryTag = session.settings.get("gizmosql.query_tag").getOrElse("")))
             val cols = p.schema.map(_.fieldNames.mkString("[\"", "\",\"", "\"]")).getOrElse("null")
             (200, "application/json",
               s"""{"handle":${quote(p.handle)},"columns":$cols}""".getBytes(StandardCharsets.UTF_8))
@@ -644,18 +638,15 @@ final class GraftHttpServer(
               case _ => None
             }
           }.toMap
-      val wantJson =
-        Option(ex.getRequestHeaders.getFirst("Accept")).exists(_.contains("application/json"))
-      statementErrors {
-        sessions.refreshManifest(session)
-        val df = session.executePrepared(handle, params)
-        val bypass = session.isAdmin &&
-          session.settings.get("gizmosql.bypass_queue").contains("true")
-        admission.withSlot(bypass, () => session.killRequested) {
-          Statement.executeWithTimeout(session, sessionTimeout(session)) {
-            streamResult(ex, wantJson, df)
+      session.lookupPrepared(handle) match {
+        case None =>
+          (400, "application/json", jsonError(s"unknown prepared statement $handle"))
+        case Some(p) =>
+          runStatement(ex, session, "DoGetPreparedStatement", p.handle, p.sql,
+            withStatement = false) {
+            sessions.refreshManifest(session)
+            session.executePrepared(handle, params)
           }
-        }
       }
     }
 
@@ -706,8 +697,9 @@ final class GraftHttpServer(
       (503, "application/json", """{"status":"NOT_SERVING"}""".getBytes(StandardCharsets.UTF_8))
 
   /** Per-statement execution metrics (the reference's OTel counters +
-    * instrumentation tables, `gizmosql_telemetry.cpp`): recent executions
-    * with durations and output-row counts, admin only.
+    * instrumentation tables, `gizmosql_telemetry.cpp`): the count of every
+    * recorded statement and the newest records with their durations and
+    * streamed-row counts, admin only.
     */
   private def handleMetrics(ex: HttpExchange): Resp =
     bearer(ex) match {
@@ -715,13 +707,12 @@ final class GraftHttpServer(
       case Right(id) if id.role != "admin" =>
         (403, "application/json", jsonError("metrics require role admin"))
       case Right(_) =>
-        val recent = observability.recent(100)
-        val items = recent.map { r =>
-          s"""{"name":${quote(r.name)},"duration_ms":${r.durationNs / 1000000},""" +
-            s""""status":${quote(r.status)},"output_rows":${r.outputRows.getOrElse(-1L)}}"""
+        val items = observability.recent(100).map { r =>
+          s"""{"name":${quote(r.operation)},"duration_ms":${r.durationNs / 1000000},""" +
+            s""""status":${quote(r.status)},"output_rows":${r.outputRows}}"""
         }.mkString("[", ",", "]")
         (200, "application/json",
-          (s"""{"executions":${recent.length},"active_sessions":${sessions.activeCount},""" +
+          (s"""{"executions":${observability.totals._1},"active_sessions":${sessions.activeCount},""" +
             s""""recent":$items}""").getBytes(StandardCharsets.UTF_8))
     }
 

@@ -427,22 +427,26 @@ class SessionAndStatementSpec extends AnyFunSuite {
     assert(sd.signal() == sd.Stopped)
   }
 
-  test("observability listener records rows, duration, and optional profile") {
-    @volatile var capture = false
-    val obs = new Observability(() => capture).install(spark)
-    try {
-      obs.clear()
-      spark.sql("SELECT id FROM RANGE(5)").collect()
-      Thread.sleep(500) // listener delivery is async
-      val recs = obs.snapshot
-      assert(recs.exists(_.status == "success"))
-      capture = true
-      spark.sql("SELECT id FROM RANGE(7)").collect()
-      Thread.sleep(500)
-      assert(obs.snapshot.exists(_.profile.exists(_.contains("Range"))))
-      assert(obs.redact("SELECT * FROM t WHERE name = 'bob' AND x > 42") ==
-        "SELECT * FROM t WHERE name = '?' AND x > ?")
-    } finally spark.listenerManager.unregister(obs)
+  test("observability records rows, duration, status and totals") {
+    // the server's statement path feeds these records (HttpServerSpec and
+    // InstrumentationServerSpec cover that side: query_tag, profile)
+    def rec(sql: String, status: String, rows: Long, ns: Long) =
+      Observability.StatementRecord("id", "s", "DoGetStatement", Observability.redact(sql),
+        status, if (status == "success") "" else "boom", rows, 1000L, ns, "", "")
+    val obs = new Observability
+    obs.add(rec("SELECT id FROM RANGE(5)", "success", 5L, 2000000L))
+    obs.add(rec("SELECT nope", "error", -1L, 1000000L))
+    obs.add(rec("SELECT id FROM RANGE(7)", "success", 7L, 3000000L))
+    assert(obs.snapshot.map(r => (r.status, r.outputRows)) ==
+      Seq(("success", 5L), ("error", -1L), ("success", 7L)))
+    assert(obs.snapshot.head.sql == "SELECT id FROM RANGE(?)")
+    assert(obs.snapshot.last.endMs == 1003L)
+    // statements, errors, output rows (a failed one streamed none), duration
+    assert(obs.totals == ((3L, 1L, 12L, 6000000L)))
+    obs.clear()
+    assert(obs.snapshot.isEmpty && obs.totals._1 == 3L)
+    assert(Observability.redact("SELECT * FROM t WHERE name = 'bob' AND x > 42") ==
+      "SELECT * FROM t WHERE name = '?' AND x > ?")
   }
 
   test("query timeout cancels the job group and the session survives") {
@@ -819,43 +823,6 @@ class GuardHardeningSpec extends AnyFunSuite {
     assert(check("DROP TABLE t").isInstanceOf[StatementGuard.Blocked])
     assert(check("SHOW TABLES") == StatementGuard.Allowed)
     assert(check("DESCRIBE region") == StatementGuard.Allowed)
-  }
-
-  test("observability stamps the session's query_tag on each record") {
-    val session = new SessionManager(spark, new GlobalSettings)
-      .getOrCreate("tagged", "alice", "admin")
-    val obs = new Observability(() => false,
-      s => if (s eq session.spark) session.settings.get("gizmosql.query_tag").getOrElse("")
-           else "").install(session.spark)
-    try {
-      session.settings.set("gizmosql.query_tag", """{"request_id":"abc-123"}""")
-      session.spark.sql("SELECT 1").collect()
-      val deadline = System.currentTimeMillis() + 5000
-      while (obs.snapshot.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(obs.snapshot.exists(_.tag.contains("abc-123")))
-      // clearing the tag (empty string) untags subsequent statements
-      session.settings.set("gizmosql.query_tag", "")
-      obs.clear()
-      session.spark.sql("SELECT 2").collect()
-      val d2 = System.currentTimeMillis() + 5000
-      while (obs.snapshot.isEmpty && System.currentTimeMillis() < d2) Thread.sleep(20)
-      assert(obs.snapshot.nonEmpty && obs.snapshot.forall(_.tag == ""))
-      obs.installView(session.spark)
-      val cols = session.spark.table("gizmosql_statements").columns
-      assert(cols.contains("query_tag"))
-    } finally session.spark.listenerManager.unregister(obs)
-  }
-
-  test("observability statements view is queryable") {
-    @volatile var capture = false
-    val obs = new Observability(() => capture).install(spark)
-    try {
-      spark.sql("SELECT 1").collect()
-      Thread.sleep(500)
-      obs.installView(spark)
-      val df = spark.sql("SELECT operation, status FROM gizmosql_statements WHERE status = 'success'")
-      assert(df.count() >= 1)
-    } finally spark.listenerManager.unregister(obs)
   }
 }
 

@@ -4,15 +4,12 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestHarness
 
 /** OTLP/HTTP export against a local fake collector: payload shape, resource
   * attributes, custom headers, the span cursor, and the env gate — the parts
   * of `docs/opentelemetry.md`'s contract testable without a real backend.
   */
 class OtlpExporterSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestHarness.spark
-
   private final class Collector {
     @volatile var metricBodies: List[String] = Nil
     @volatile var traceBodies: List[String] = Nil
@@ -37,12 +34,16 @@ class OtlpExporterSpec extends AnyFunSuite {
     def stop(): Unit = server.stop(0)
   }
 
+  private def record(name: String) =
+    Observability.StatementRecord("stmt-1", "sess-1", name, "SELECT * FROM t WHERE x = ?",
+      "success", "", 100L, System.currentTimeMillis(), 1000000L, "job-7", "")
+
+  /** An Observability holding one statement, as the server's statement
+    * path records it.
+    */
   private def recordedObservability(): Observability = {
-    val obs = new Observability(() => false).install(spark)
-    spark.range(100).count() // a real action so the listener records a statement
-    val deadline = System.currentTimeMillis() + 10000
-    while (obs.snapshot.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
-    assert(obs.snapshot.nonEmpty, "listener never fired")
+    val obs = new Observability
+    obs.add(record("DoGetStatement"))
     obs
   }
 
@@ -61,6 +62,8 @@ class OtlpExporterSpec extends AnyFunSuite {
       assert(m.contains(""""isMonotonic":true"""))
       val t = collector.traceBodies.head
       assert(t.contains(""""spans":[{"traceId":""") && t.contains(""""status":{"code":1}"""))
+      assert(t.contains(""""name":"DoGetStatement""""))
+      assert(t.contains(""""key":"gizmosql.rows","value":{"intValue":"100"}"""))
       assert(collector.lastHeaders.get("x-api-key").contains("secret"))
       assert(collector.lastHeaders.get("content-type").contains("application/json"))
     } finally collector.stop()
@@ -69,13 +72,7 @@ class OtlpExporterSpec extends AnyFunSuite {
   test("spans export once per record; metrics stay cumulative") {
     val collector = new Collector
     try {
-      // NOT installed on the shared session: suites run in parallel against
-      // one SparkContext, so a listener-fed instance can pick up a
-      // concurrent suite's query between the two flushes (observed flake:
-      // a Health.scala collect span landed in flush #2). Feeding the
-      // listener callback directly keeps the record set exact.
-      val obs = new Observability(() => false)
-      obs.onSuccess("count", spark.range(1).queryExecution, 1000000L)
+      val obs = recordedObservability()
       val exporter = new OtlpExporter(obs, collector.endpoint, "graft-test")
       exporter.flush()
       val firstTraces = collector.traceBodies.size
@@ -88,17 +85,16 @@ class OtlpExporterSpec extends AnyFunSuite {
   test("the record history is a bounded ring; each retained record exports once") {
     val collector = new Collector
     try {
-      val obs = new Observability(() => false)
-      val qe = spark.range(1).queryExecution
+      val obs = new Observability
       val exporter = new OtlpExporter(obs, collector.endpoint, "graft-test")
-      (1 to 3).foreach(i => obs.onSuccess(s"a$i", qe, 1000L))
+      (1 to 3).foreach(i => obs.add(record(s"a$i")))
       exporter.flush()
       // capacity + 5 more: the oldest five of them drop before the next flush
       val n = Observability.Capacity + 5
-      (1 to n).foreach(i => obs.onSuccess(s"b$i", qe, 1000L))
+      (1 to n).foreach(i => obs.add(record(s"b$i")))
       val retained = (6 to n).map(i => s"b$i")
-      assert(obs.snapshot.map(_.name) == retained)
-      assert(obs.recent(3).map(_.name) == retained.takeRight(3))
+      assert(obs.snapshot.map(_.operation) == retained)
+      assert(obs.recent(3).map(_.operation) == retained.takeRight(3))
       exporter.flush()
       exporter.flush()
       val spans = collector.traceBodies.flatMap(
@@ -118,7 +114,7 @@ class OtlpExporterSpec extends AnyFunSuite {
   }
 
   test("env gate: disabled by default, enabled by GIZMOSQL_OTEL_ENABLED; headers parse") {
-    val obs = new Observability(() => false)
+    val obs = new Observability
     assert(OtlpExporter.fromEnv(obs, Map.empty).isEmpty)
     assert(OtlpExporter.fromEnv(obs, Map("GIZMOSQL_OTEL_ENDPOINT" -> "http://x")).isEmpty)
     assert(OtlpExporter.fromEnv(obs, Map("GIZMOSQL_OTEL_ENABLED" -> "true")).isDefined)

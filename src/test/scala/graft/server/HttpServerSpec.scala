@@ -440,6 +440,22 @@ class HttpServerSpec extends AnyFunSuite {
     assert(new String(read.body(), StandardCharsets.UTF_8) == """[{"value":"wire-test"}]""")
   }
 
+  test("each statement record carries the session's query_tag at execution") {
+    def run(sql: String) = assert(post("/sql", sql, "Authorization" -> s"Bearer $token",
+      "Accept" -> "application/json").statusCode() == 200, sql)
+    def tagOf(probe: String) = server.observability.snapshot.filter(_.sql.contains(probe))
+      .map(_.tag)
+    try {
+      run("""SET SESSION gizmosql.query_tag = '{"request_id":"abc-123"}'""")
+      run("SELECT 1 AS tag_on_probe")
+      assert(tagOf("tag_on_probe") == Seq("""{"request_id":"abc-123"}"""))
+      // clearing the tag (empty string) untags subsequent statements
+      run("SET SESSION gizmosql.query_tag = ''")
+      run("SELECT 2 AS tag_off_probe")
+      assert(tagOf("tag_off_probe") == Seq(""))
+    } finally run("SET SESSION gizmosql.query_tag = ''")
+  }
+
   test("KILL SESSION over the wire tombstones the target") {
     // victim = a fresh OIDC session
     val vResp = post("/auth", "", "Authorization" -> basic("token", externalToken("victim@example.com")))

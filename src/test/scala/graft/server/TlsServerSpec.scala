@@ -1,7 +1,7 @@
 package graft.server
 
 import graft.{SparkTestHarness, Tables}
-import graft.engine.Auth
+import graft.engine.{Auth, GraftLog}
 import java.net.URI
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
@@ -36,9 +36,13 @@ class TlsServerSpec extends AnyFunSuite {
     ksPath
   }
 
+  // this spec's servers, told apart from other suites' in the shared log
+  private val instanceId = "tls-spec-instance"
+
   private def newServer(tls: GraftHttpServer.Tls): (GraftHttpServer, Int) = {
     Tables.ensure(spark, SparkTestHarness.sfDir)
     val s = new GraftHttpServer(spark, secret, Auth.hashPassword(secret, password),
+      instanceId = instanceId,
       onSessionCreate = Tables.ensure(_, SparkTestHarness.sfDir), tls = Some(tls))
     (s, s.start())
   }
@@ -166,23 +170,33 @@ class TlsServerSpec extends AnyFunSuite {
   }
 
   test("access log records authenticated and rejected requests, SQL redacted") {
-    val before = server.accessLog.snapshot.size
-    val (okCode, _, _) = post(port, "/sql",
-      "SELECT r_name FROM region WHERE r_regionkey = 3",
-      "Authorization" -> s"Bearer $token", "Accept" -> "application/json")
-    assert(okCode == 200)
-    val (denied, _, _) = post(port, "/metrics", "", "Authorization" -> "Bearer bogus")
-    assert(denied == 401)
-    val entries = server.accessLog.snapshot.drop(before)
-    val sqlEntry = entries.find(e => e.path == "/sql" && e.status == 200).get
-    assert(sqlEntry.user == "gizmosql_username")
-    assert(sqlEntry.method == "POST")
-    assert(sqlEntry.bytes > 0)
+    val entries = new java.util.concurrent.ConcurrentLinkedQueue[GraftLog.LogRecord]()
+    val sink = GraftLog.registerSink { r =>
+      if (r.component == "http" && r.instanceId == instanceId) { entries.add(r); () }
+    }
+    try {
+      val (okCode, _, _) = post(port, "/sql",
+        "SELECT r_name FROM region WHERE r_regionkey = 3",
+        "Authorization" -> s"Bearer $token", "Accept" -> "application/json")
+      assert(okCode == 200)
+      val (denied, _, _) = post(port, "/metrics", "", "Authorization" -> "Bearer bogus")
+      assert(denied == 401)
+    } finally GraftLog.removeSink(sink)
+    // message "METHOD /path STATUS"; status, duration_ms, bytes, detail in the fields
+    def field(r: GraftLog.LogRecord, k: String) =
+      s""""$k":("(?:[^"\\\\]|\\\\.)*"|-?\\d+)""".r.findFirstMatchIn(r.fieldsJson).map(_.group(1))
+    val all = entries.toArray(Array.empty[GraftLog.LogRecord]).toSeq
+    val sqlEntry = all.find(_.message == "POST /sql 200").get // method, path, status
+    assert(sqlEntry.username == "gizmosql_username")
+    assert(field(sqlEntry, "status").contains("200"))
+    assert(field(sqlEntry, "duration_ms").exists(_.toLong >= 0))
+    assert(field(sqlEntry, "bytes").exists(_.toLong > 0))
     // redaction: the literal 3 never appears in the logged statement
-    assert(sqlEntry.detail.contains("r_regionkey = ?"))
-    assert(!sqlEntry.detail.matches(".*=\\s*3.*"))
-    val deniedEntry = entries.find(e => e.path == "/metrics").get
-    assert(deniedEntry.status == 401 && deniedEntry.user == "-")
+    val detail = field(sqlEntry, "detail").get
+    assert(detail.contains("r_regionkey = ?"))
+    assert(!detail.matches(".*=\\s*3.*"))
+    val deniedEntry = all.find(_.message.startsWith("POST /metrics")).get
+    assert(field(deniedEntry, "status").contains("401") && deniedEntry.username == "")
   }
 
   test("server closes cleanly") {
