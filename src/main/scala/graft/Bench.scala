@@ -244,12 +244,17 @@ object Bench {
     // canonical slot tools/bench_pair.sh keys on; the cpus-suffixed copy
     // stops a lower-core rerun from clobbering the 32-core medians (r17: the
     // c8 run overwrote the only copy of the 32-core per-query numbers). The
-    // suffix is the parallelism the run actually had, whatever set it.
+    // suffix is the parallelism the run actually had, whatever set it. Both
+    // land in the build output directory (target/bench, ignored by git),
+    // never in the checkout's tracked files.
     val cpus = spark.sparkContext.defaultParallelism
-    for (path <- Seq("tools/bench_last.json", s"tools/bench_last_c$cpus.json"))
-      try java.nio.file.Files.write(java.nio.file.Paths.get(path),
-        (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case _: Throwable => } // stdout remains the contract
+    val outDir = java.nio.file.Paths.get("target", "bench")
+    for (name <- Seq("bench_last.json", s"bench_last_c$cpus.json"))
+      try {
+        java.nio.file.Files.createDirectories(outDir)
+        java.nio.file.Files.write(outDir.resolve(name),
+          (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      } catch { case _: Throwable => } // stdout remains the contract
     spark.stop()
   }
 }

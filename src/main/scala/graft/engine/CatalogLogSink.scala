@@ -65,6 +65,10 @@ final class CatalogLogSink(
     // Idempotent: a restarted server re-attaches the same path and
     // re-discovers the logs table (attach refreshes same-path attachments).
     attachments.attach(spark, catalog, dir, readOnly = false)
+    // The table directory exists from the start: a refresh or scan before
+    // the first batch lands lists an empty table instead of warning.
+    val logsDir = new java.io.File(dir, "logs")
+    logsDir.mkdirs()
     spark.sql(
       s"""CREATE TABLE IF NOT EXISTS `$catalog`.logs (
          |  log_time TIMESTAMP, level STRING, instance_id STRING,
@@ -74,7 +78,7 @@ final class CatalogLogSink(
          |  source_line INT, func STRING, message STRING, fields STRING,
          |  log_date DATE)
          |USING parquet PARTITIONED BY (log_date)
-         |LOCATION '${new java.io.File(dir, "logs").getAbsolutePath}'""".stripMargin)
+         |LOCATION '${logsDir.getAbsolutePath}'""".stripMargin)
     ()
   }
 

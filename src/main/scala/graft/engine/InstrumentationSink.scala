@@ -60,13 +60,17 @@ final class InstrumentationSink(
     if (!d.isDirectory) { d.mkdirs(); () }
     attachments.attach(spark, catalog, dir, readOnly = false)
     Tables.foreach { case (name, schema) =>
+      // The table directory exists from the start: a refresh or scan before
+      // the first batch lands lists an empty table instead of warning.
+      val tableDir = new java.io.File(dir, name)
+      tableDir.mkdirs()
       val partition = PartitionCol.get(name)
       val cols = schema.fields.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
       val partClause = partition.map(c => s"PARTITIONED BY ($c)").getOrElse("")
       spark.sql(
         s"""CREATE TABLE IF NOT EXISTS `$catalog`.$name ($cols)
            |USING parquet $partClause
-           |LOCATION '${new java.io.File(dir, name).getAbsolutePath}'""".stripMargin)
+           |LOCATION '${tableDir.getAbsolutePath}'""".stripMargin)
       ()
     }
   }

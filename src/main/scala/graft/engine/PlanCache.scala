@@ -184,11 +184,11 @@ object PlanCache {
     * clone.
     *
     * A candidate is planned once, on the adaptive-off clone at a size-scaled
-    * partition count (~16 MB of input per partition, floor 4, never above the
-    * live setting — what AQE's coalescing would arrive at). Forcing
-    * `executedPlan` there pins the static plan on that QueryExecution, so
-    * every later action on the dataset runs it. Two shapes in that plan send
-    * the candidate back to the live session ([[staticBlocker]]).
+    * partition count: one per 16 MB of input, at least 1 and never above the
+    * live setting ([[pinPartitions]]). Forcing `executedPlan` there pins
+    * the static plan on that QueryExecution, so every later action on the
+    * dataset runs it. Two shapes in that plan send the candidate back to the
+    * live session ([[staticBlocker]]).
     *
     * Measured (perfbench olap_mix, 4-core VM, `--seconds 20`, 6 interleaved
     * pairs, seeds 7101-7106): with the pin off `stmt_p50_ms` went 240 -> 336
@@ -217,8 +217,7 @@ object PlanCache {
         // Values cannot depend on the partition count: sampling is
         // md5-deterministic, and the global-ntile id arithmetic corrects
         // per-partition offsets by construction.
-        val sized = (bytes + (16L << 20) - 1) / (16L << 20)
-        val parts = math.min(liveParts.toLong, math.max(4L, sized)).toInt
+        val parts = pinPartitions(bytes, liveParts)
         val df = org.apache.spark.sql.GraftDatasetShim.ofRowsPreOptimized(pinSession(spark, parts), optimized)
         val pinned =
           try !staticBlocker(df.queryExecution.executedPlan)
@@ -226,6 +225,25 @@ object PlanCache {
         if (pinned) (df, Some(parts)) else live
     }
   }
+
+  /** The shuffle-partition count a pinned plan over `inputBytes` of files is
+    * planned at: one per 16 MB of input, at least 1 and never above the live
+    * setting. There is no higher floor: at one reduce partition a global sort's `RangePartitioner` skips
+    * its sampling job and `TakeOrderedAndProjectExec` skips its
+    * single-partition shuffle, and each reduce stage runs one task instead
+    * of several near-empty ones.
+    *
+    * Measured against a floor of 4 (perfbench olap_mix, 4-core VM,
+    * `--seconds 20 --trace 0`, 8 interleaved pairs, seeds 11-14 and 81-84,
+    * order alternated): `stmt_p50_ms` 235.7 -> 207.0 (this rule won 8 of 8,
+    * median per-pair ratio 0.81), `stmt_tail_ms` 448 -> 409, `stmt_per_s`
+    * 8.6 -> 9.3, `heap_used_mb` 235.0 -> 233.6; `plan.execute()` before the
+    * fetch went ~280 -> ~50 ms on agg_h01 and ~150 -> ~34 ms on
+    * events_hourly. llm_pipeline (seeds 61-63) read p50 753 -> 757, within
+    * noise.
+    */
+  private[engine] def pinPartitions(inputBytes: Long, liveParts: Int): Int =
+    math.min(liveParts.toLong, math.max(1L, (inputBytes + (16L << 20) - 1) / (16L << 20))).toInt
 
   /** The summed file bytes of a plan whose every leaf, subqueries included,
     * is a file-scan relation or local rows; None for any other plan.

@@ -332,17 +332,23 @@ object Statement {
     sessions.refreshManifest(session)
     // Log-catalog tables are appended continuously by the sink's writer,
     // OUTSIDE the SQL path, so nothing else drops this session's cached
-    // file listing for them. Refresh before resolving — bounded to
-    // statements that name a log catalog, PLUS the case where `USE
-    // _graft_logs` made it the current database so a bare `SELECT * FROM
-    // logs` never mentions the catalog textually.
-    CatalogLogSink.activeCatalogs.foreach { c =>
-      if (sql.toLowerCase.contains(c) ||
-          CatalogLogSink.isLogCatalog(TableNames.currentDb(session.spark)))
-        CatalogLogSink.tablesOf(c).foreach { t =>
+    // file listing for them. Refresh before resolving — only the tables a
+    // statement naming the catalog names as a word, or every table of the
+    // catalog when `USE _graft_logs` made it the current database (a bare
+    // `SELECT * FROM logs` never mentions the catalog textually).
+    if (CatalogLogSink.activeCatalogs.nonEmpty) {
+      val text = sql.toLowerCase
+      val current = TableNames.currentDb(session.spark)
+      CatalogLogSink.activeCatalogs.foreach { c =>
+        val named = CatalogLogSink.tablesOf(c).filter { t =>
+          c == current || (text.contains(c) &&
+            s"\\b${java.util.regex.Pattern.quote(t)}\\b".r.findFirstIn(text).isDefined)
+        }
+        named.foreach { t =>
           try session.spark.sql(s"REFRESH TABLE `$c`.`$t`")
           catch { case scala.util.control.NonFatal(_) => }
         }
+      }
     }
     // Statement-attempt query log (reference duckdb_statement.cpp:886-894):
     // natural INFO, suppressed below the session/global query_log_level.

@@ -430,23 +430,67 @@ class PlanCacheSpec extends AnyFunSuite {
   test("a cached static-pinned ORDER BY result is fetched in one Spark job") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val s = spark.newSession()
+    // Over 16 MB of files, so the pin sizes its sort at several partitions:
+    // unique 64-character hashes that neither dictionary encoding nor
+    // compression shrink.
+    val dir = java.nio.file.Files.createTempDirectory("pc-wide")
+    try {
+      val path = dir.resolve("t").toString
+      s.range(0, 600000, 1, 4).selectExpr("id", "sha2(CAST(id AS STRING), 256) AS h")
+        .write.parquet(path)
+      s.read.parquet(path).createOrReplaceTempView("pc_wide")
+      val df = PlanCache.sql(s, "SELECT id, h FROM pc_wide WHERE id % 20000 = 0 ORDER BY h")
+      val plan = df.queryExecution.executedPlan
+      assert(!plan.isInstanceOf[AdaptiveSparkPlanExec], s"expected a static pin:\n$plan")
+      val partitions = plan.execute().getNumPartitions
+      assert(partitions > 1, "the result must span several partitions")
+      def fetchJobs(): (Seq[String], Int) = {
+        val (bytes, n) = countingJobs(s)(graft.sources.ArrowIO.toArrowStream(df))
+        (graft.sources.ArrowIO.fromArrowStream(s, bytes).collect().map(_.getString(1)).toSeq, n)
+      }
+      val (first, _) = fetchJobs()
+      assert(first == first.sorted && first.size == 30)
+      // The cached hit re-runs only the result stage: one job for every
+      // partition (toLocalIterator ran one per partition).
+      val (again, n) = fetchJobs()
+      assert(again == first)
+      assert(n == 1, s"fetching $partitions result partitions took $n jobs")
+    } finally {
+      val files = java.nio.file.Files.walk(dir)
+      try files.sorted(java.util.Comparator.reverseOrder()).forEach(f => java.nio.file.Files.delete(f))
+      finally files.close()
+    }
+  }
+
+  test("a small pinned ORDER BY plans one reduce partition: no range-sampling job") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val s = spark.newSession()
     graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
-    val df = PlanCache.sql(s, "SELECT n_nationkey, n_name FROM nation ORDER BY n_name")
+    val df = PlanCache.sql(s,
+      "SELECT l_returnflag, COUNT(*) AS n FROM lineitem GROUP BY 1 ORDER BY 1")
     val plan = df.queryExecution.executedPlan
     assert(!plan.isInstanceOf[AdaptiveSparkPlanExec], s"expected a static pin:\n$plan")
-    val partitions = plan.execute().getNumPartitions
-    assert(partitions > 1, "the result must span several partitions")
-    def fetchJobs(): (Seq[String], Int) = {
-      val (bytes, n) = countingJobs(s)(graft.sources.ArrowIO.toArrowStream(df))
-      (graft.sources.ArrowIO.fromArrowStream(s, bytes).collect().map(_.getString(1)).toSeq, n)
-    }
-    val (first, _) = fetchJobs()
-    assert(first == first.sorted && first.size == 25)
-    // The cached hit re-runs only the result stage: one job for every
-    // partition (toLocalIterator ran one per partition).
-    val (again, n) = fetchJobs()
-    assert(again == first)
-    assert(n == 1, s"fetching $partitions result partitions took $n jobs")
+    val ranges = plan.collect { case p => p.outputPartitioning }.collect {
+      case r: RangePartitioning if r.numPartitions > 1 => r
+    }.distinct
+    assert(ranges.isEmpty, s"a small input must not range-partition its sort:\n$plan")
+    // Without a range partitioner to sample, the first fetch is the one job.
+    val (bytes, n) = countingJobs(s)(graft.sources.ArrowIO.toArrowStream(df))
+    assert(n == 1, s"the first fetch took $n jobs:\n$plan")
+    val flags = graft.sources.ArrowIO.fromArrowStream(s, bytes).collect().map(_.getString(0)).toSeq
+    assert(flags.nonEmpty && flags == flags.sorted)
+  }
+
+  test("a pin takes one shuffle partition per 16 MB of input, capped by the live setting") {
+    val mb16 = 16L << 20
+    assert(PlanCache.pinPartitions(0L, 200) == 1)
+    assert(PlanCache.pinPartitions(mb16, 200) == 1)
+    assert(PlanCache.pinPartitions(mb16 + 1, 200) == 2)
+    assert(PlanCache.pinPartitions(256L << 20, 200) == 16)
+    for (live <- Seq(1, 3, 200); bytes <- Seq(0L, mb16, mb16 + 1, 100 * mb16, 1L << 40))
+      assert(PlanCache.pinPartitions(bytes, live) <= live, s"$bytes bytes at live $live")
+    assert(PlanCache.pinPartitions(100 * mb16, 3) == 3)
   }
 
   test("a command's result is fetched without a Spark job") {

@@ -7,7 +7,7 @@
 # them by construction:
 #
 #   1. DuckDB comparator  -> tools/comparator_<sf>.json  (A)
-#   2. graft.Bench        -> tools/bench_last.json       (B, embeds A)
+#   2. graft.Bench        -> target/bench/bench_last.json (B, embeds A)
 #   3. DuckDB comparator re-run, printed for drift check (A')
 #
 # If A and A' disagree by >10% the window was noisy — rerun. Usage:
@@ -18,6 +18,8 @@ cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.1}"
 ORACLE="${2:-/tmp/verify_out/oracle_sql.json}"
 SF_NAME="$(basename "$SF_DIR")"
+# graft.Bench writes its full record under the build output directory.
+BENCH_LAST="target/bench/bench_last.json"
 
 if [ ! -f "$ORACLE" ]; then
   echo "oracle json not found at $ORACLE — run graft.Verify first" >&2
@@ -28,11 +30,11 @@ fi
 # banked measurement (it did, twice — the restore commit c8ca81c). On a
 # >10% drift verdict the backups are restored and the noisy artifacts kept
 # aside as *_noisy.json for inspection.
-for f in "tools/bench_last.json" "tools/comparator_${SF_NAME}.json"; do
+for f in "$BENCH_LAST" "tools/comparator_${SF_NAME}.json"; do
   [ -f "$f" ] && cp "$f" "$f.bak"
 done
 restore_on_noise() {
-  for f in "tools/bench_last.json" "tools/comparator_${SF_NAME}.json"; do
+  for f in "$BENCH_LAST" "tools/comparator_${SF_NAME}.json"; do
     if [ -f "$f.bak" ]; then
       mv "$f" "${f%.json}_noisy.json" || true
       mv "$f.bak" "$f"
@@ -74,7 +76,7 @@ echo "== [A'] comparator drift check =="
 python3 tools/comparator.py "$SF_DIR" "$ORACLE" >/dev/null
 A2_TOTAL=$(python3 -c "import json;print(json.load(open('tools/comparator_${SF_NAME}.json'))['total'])")
 
-B_TOTAL=$(python3 -c "import json;print(json.load(open('tools/bench_last.json'))['value'])")
+B_TOTAL=$(python3 -c "import json;print(json.load(open('$BENCH_LAST'))['value'])")
 # Drift gate: a drift-clean pair is banked as measured (the latest clean
 # window, never a best-of selection); a noisy one restores the previous pair.
 if python3 - "$A_TOTAL" "$A2_TOTAL" "$B_TOTAL" <<'EOF'
@@ -88,7 +90,7 @@ if drift > 0.10:
     sys.exit(3)
 EOF
 then
-  rm -f "tools/bench_last.json.bak" "tools/comparator_${SF_NAME}.json.bak"
+  rm -f "$BENCH_LAST.bak" "tools/comparator_${SF_NAME}.json.bak"
 else
   restore_on_noise
   exit 3
