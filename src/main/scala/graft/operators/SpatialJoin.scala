@@ -335,7 +335,7 @@ object SpatialJoin {
         // free the PREVIOUS remainder's blocks (round 0 reads the caller's
         // frame — nothing pinned). Dataset.unpersist is a no-op on
         // localCheckpoint blocks; unpersist the RDD under the LogicalRDD
-        // leaf (the jaccardPairsGated lesson, TextPipeline.scala:140).
+        // leaf.
         if (round > 0) remaining.queryExecution.analyzed.collectFirst {
           case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
         }
@@ -356,8 +356,8 @@ object SpatialJoin {
         // Materialize the final union into ONE block set, then free every
         // per-round kept checkpoint and the final remainder: without this a
         // long-lived server accumulates |left|*k pinned rows per kNN call
-        // until ContextCleaner GC (the jaccardPairsGated lesson applied to
-        // the kept pieces, not just the superseded remainders). The caller
+        // until ContextCleaner GC (the kept pieces are freed too, not just
+        // the superseded remainders). The caller
         // can release the result itself via freeLocalCheckpoint once
         // consumed.
         val result = o.localCheckpoint(true)

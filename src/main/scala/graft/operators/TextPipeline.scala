@@ -76,7 +76,7 @@ object TextPipeline {
     * r18 measured-and-rejected (guide §1.1): replacing dropDuplicates +
     * window with ONE collect_set aggregate + explode (`n` = array size, no
     * sort anywhere) is a wash — OPTIMIZATION_r18.md interleaved medians 0.751 s
-    * (this shape) vs 0.759 s (agg+explode) over the full gated jaccard; the
+    * (this shape) vs 0.759 s (agg+explode) over the full jaccard pipeline; the
     * array build + re-explode costs what the sort saved. Likewise the
     * gram-side df as groupBy(gram)+collect_list+explode: 0.84 s, an 11%
     * LOSS, and its per-gram array state cannot spill where the window's
@@ -89,11 +89,38 @@ object TextPipeline {
       .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
       .repartition(col("gram"))
 
+  /** The shared-gram index: [[shingleHashes]] rows with each gram's document
+    * frequency `df`, keeping only grams that appear in >= 2 docs — the
+    * inverted index both pair operators self-join. df=1 grams, the bulk of a
+    * mostly-unique corpus, can contribute to no intersection, so dropping
+    * them from BOTH join sides is lossless; union sizes still ride along
+    * from the unfiltered per-doc counts (`n`).
+    *
+    * Document frequency is a window count over the gram clustering the
+    * exchange already provides — NOT a separate aggregate branch +
+    * semi-join: the aggregate branch's copy of the exchange subtree gets
+    * column-pruned differently (no `n`), which defeats ReusedExchange and
+    * re-runs the whole scan+explode+hash pipeline (measured: two parallel
+    * 3+ s stages computing identical grams). A groupBy(gram) aggregate
+    * carrying the doc list as collect_list was measured SLOWER too
+    * (OPTIMIZATION_r18.md, interleaved: df-agg variants 1.33/1.37 s vs
+    * window 1.29/1.20 s medians — the struct collect + re-explode costs
+    * more than the sort it saves), and its per-group array state cannot
+    * spill, where the window's partition buffer can. Residual declared
+    * straggler: the window COUNT itself still processes a hot gram's group
+    * in one task — linear, unlike the join's quadratic, and the documented
+    * corpus-scale answer for pathological grams is MinHash banding upstream.
+    */
+  private def sharedGrams(d: DataFrame): DataFrame =
+    shingleHashes(d)
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("gram")))
+      .filter(col("df") >= 2)
+
   /** Exact n-gram Jaccard similarity for all pairs above `threshold`.
-    * Shuffles on `gram` (the inverted index, pre-shrunk to shareable grams)
-    * then on the pair — both standard equi-joins; at 100 TB you'd pre-filter
-    * with MinHash banding (below) and feed only candidate pairs through the
-    * exact verifier.
+    * Shuffles on `gram` (the inverted index, pre-shrunk to shareable grams
+    * by [[sharedGrams]]) then on the pair — both standard equi-joins; at
+    * 100 TB you'd pre-filter with MinHash banding (below) and feed only
+    * candidate pairs through the exact verifier.
     *
     * A Bayardo-style document-frequency prefix filter was measured here and
     * REJECTED: at threshold 0.12 the prefix keeps (1-t) ~ 88% of each doc's
@@ -101,170 +128,23 @@ object TextPipeline {
     * grams rather than concentrated in a few high-df ones, so the candidate
     * join barely shrank while the separate verification pass doubled the
     * stage count — 5.3 s vs 2.6 s baseline vs 0.98 s for this shape at
-    * sf0.1. The df>=2 restriction below is the part of that idea that pays
-    * for itself at any threshold.
-    */
-  /** Default = the LAZY static cold/hot union (below): callers that compose
-    * plans lazily or replay them (streams, cached query shapes) get a plan,
-    * not an execution. The gated shape runs Spark jobs eagerly at
-    * DataFrame-CONSTRUCTION time (localCheckpoint + max-df probe) and pins
-    * a snapshot that will not reflect later source mutations — it is
-    * opt-in under its explicit name [[jaccardPairsGated]] (r11 ADVICE: an
-    * eager default silently changed public-overload semantics). Batch
-    * callers that want the measured ~9% benign-corpus win (r12 interleaved
-    * A/B: 0.754 vs 0.826 s median at sf0.1) opt in explicitly.
-    */
-  def jaccardPairs(d: DataFrame, threshold: Double): DataFrame =
-    jaccardPairs(d, threshold, hotDfCap = 1 << 12, salts = 16)
-
-  /** Batch form with the hot branch GATED on a measured df sketch (VERDICT
-    * r10 #6): the static union below schedules the salted exchanges even
-    * when no gram exceeds the cap — empty stages that measured ~0.18 s
-    * flat tax at sf0.1 (round 11: e_cold_only 0.70 s vs c_split_mat 0.87 s,
-    * same window; ARCHITECTURE.md at 7f0c93f). Here the gram index (post
-    * df>=2 filter) is pinned ONCE with an eager localCheckpoint — which
-    * preserves the window exchange's hash(gram) clustering, so it doubles as
-    * the
-    * materialization point the static form bought with an extra
-    * repartition — and `max(df) > cap` is probed from the pinned blocks
-    * (a block scan, ~ms; no recompute). Benign corpora then run ONLY the
-    * unsalted self-join over the pinned index: no salted stage is ever
-    * scheduled (measured 0.775 s vs 0.874 s for the static union, same
-    * window). A corpus with a hot gram builds the same cold/hot union as
-    * the static form, both branches reading the pinned blocks. An
-    * Observation-based gate (max(df) carried out of the cold join itself)
-    * was REJECTED: when the cold side is empty the hash join short-
-    * circuits without consuming the observed subtree and the metric never
-    * materializes — measured obs={} exactly in the case the gate must
-    * detect. Streams or replayed plans must use the static
-    * [[jaccardPairs(d,threshold,hotDfCap,salts)]] form: the gate decides
-    * from THIS corpus's data and an eager checkpoint cannot re-execute.
-    * Scale posture: the pinned blocks are O(index) = the same rows the
-    * static form's repartition exchange already wrote to shuffle storage.
-    */
-  def jaccardPairsGated(d: DataFrame, threshold: Double, hotDfCap: Int,
-      salts: Int): DataFrame = {
-    val (lazyPairs, g2) = jaccardPairsGatedPlan(d, threshold, hotDfCap, salts)
-    // Materialize the (output-sized) pair list, then FREE the pinned gram
-    // index: without this a long-lived server accumulates checkpoint blocks
-    // across calls until ContextCleaner GC (r11 verdict). Dataset.unpersist
-    // would be a no-op here (localCheckpoint blocks are RDD-owned, not
-    // CacheManager entries) — unpersist the checkpointed RDD itself,
-    // reachable from the LogicalRDD leaf.
-    val result = lazyPairs.localCheckpoint(true)
-    g2.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-    }
-    result
-  }
-
-  /** The gated computation WITHOUT the result materialization: returns the
-    * lazy pair plan plus the pinned index it reads (caller owns the blocks).
-    * Package-private — the plan-shape regression test asserts the benign
-    * path builds only the unsalted cold join, which the public form's
-    * result checkpoint would hide behind a LogicalRDD leaf.
-    */
-  private[operators] def jaccardPairsGatedPlan(d: DataFrame, threshold: Double,
-      hotDfCap: Int, salts: Int): (DataFrame, DataFrame) = {
-    // max(df) rides the checkpoint job as an Observation instead of a
-    // separate `isEmpty` probe job (r17): on benign corpora the old take(1)
-    // probe scanned every pinned block across escalating job waves —
-    // measured 150-275 ms of the per-call wall (OPTIMIZATION_r17.md) for a
-    // fact the checkpoint's own pass already touches. CollectMetrics is
-    // safe HERE because the eager checkpoint consumes the whole observed
-    // subtree — unlike the r11-rejected join-side Observation, which never
-    // materialized when the hash join short-circuited on an empty side.
-    //
-    // Document frequency stays a WINDOW count over the gram clustering —
-    // a groupBy(gram) aggregate carrying the doc list as collect_list was
-    // measured SLOWER here (OPTIMIZATION_r18.md, interleaved: df-agg variants
-    // 1.33/1.37 s vs window 1.29/1.20 s medians — the struct collect +
-    // re-explode costs more than the sort it saves) and its per-group array
-    // state cannot spill, where the window's partition buffer can.
-    val obs = org.apache.spark.sql.Observation()
-    val g2 = shingleHashes(d)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("gram")))
-      .filter(col("df") >= 2)
-      .observe(obs, max(col("df")).as("maxDf"))
-      .localCheckpoint(true)
-    // Bounded metric wait (r17 ADVICE): Observation completion rides the
-    // async ExecutionListenerBus; a dropped SQLExecutionEnd event (bounded
-    // listener queue under load on a long-lived server) would hang a bare
-    // obs.get forever. The checkpoint is already materialized here, so the
-    // metric normally arrives in ms — poll briefly, then fall back to a
-    // block-scan probe of the pinned index (the pre-r17 gate, extra cost
-    // but no hang mode).
-    val anyHot = {
-      def metrics = org.apache.spark.sql.GraftDatasetShim.observedOrEmpty(obs)
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var m = metrics
-      while (m.isEmpty && System.nanoTime() < deadline) { Thread.sleep(20); m = metrics }
-      if (m.nonEmpty) Option(m.getOrElse("maxDf", null))
-        .exists(_.asInstanceOf[Number].longValue > hotDfCap)
-      else !g2.filter(col("df") > hotDfCap).isEmpty
-    }
-    val pairRows = if (!anyHot) {
-      val cold = g2.drop("df")
-      cold.select(col("gram"), col("doc_id").as("ld"), col("n").as("ln"))
-        .hint("shuffle_hash")
-        .join(cold.select(col("gram"), col("doc_id").as("rd"), col("n").as("rn")),
-          Seq("gram"))
-        .filter(col("ld") < col("rd"))
-        .select("ld", "rd", "ln", "rn")
-    } else {
-      val cold = g2.filter(col("df") <= hotDfCap).drop("df")
-      val hot = g2.filter(col("df") > hotDfCap).drop("df")
-        .withColumn("salt", pmod(xxhash64(col("doc_id")), lit(salts)).cast("int"))
-      val coldPairs = cold.select(col("gram"), col("doc_id").as("ld"), col("n").as("ln"))
-        .hint("shuffle_hash")
-        .join(cold.select(col("gram"), col("doc_id").as("rd"), col("n").as("rn")),
-          Seq("gram"))
-        .filter(col("ld") < col("rd"))
-        .select("ld", "rd", "ln", "rn")
-      // Salted triangle-block decomposition, pinned partitions — identical
-      // to the static form (see jaccardPairs below for the full rationale).
-      val hotParts = d.sparkSession.sessionState.conf.numShufflePartitions
-      val lhs = hot.withColumn("j", explode(sequence(col("salt"), lit(salts - 1))))
-        .select(col("gram"), col("doc_id").as("ld"), col("n").as("ln"),
-          col("salt").as("i"), col("j"))
-        .repartition(hotParts, col("gram"), col("i"), col("j"))
-      val rhs = hot.withColumn("i", explode(sequence(lit(0), col("salt"))))
-        .select(col("gram"), col("doc_id").as("rd"), col("n").as("rn"),
-          col("i"), col("salt").as("j"))
-        .repartition(hotParts, col("gram"), col("i"), col("j"))
-      val hotPairs = lhs.hint("shuffle_hash").join(rhs, Seq("gram", "i", "j"))
-        .filter(col("i") =!= col("j") || col("ld") < col("rd"))
-        .select("ld", "rd", "ln", "rn")
-      coldPairs.unionByName(hotPairs)
-    }
-    val pairs = pairRows
-      .groupBy(
-        least(col("ld"), col("rd")).as("id_a"),
-        greatest(col("ld"), col("rd")).as("id_b"),
-        when(col("ld") < col("rd"), col("ln")).otherwise(col("rn")).as("na"),
-        when(col("ld") < col("rd"), col("rn")).otherwise(col("ln")).as("nb"))
-      .agg(count(lit(1)).as("inter"))
-    val jac = col("inter").cast("double") / (col("na") + col("nb") - col("inter"))
-    val result = pairs
-      .filter(jac >= threshold)
-      .select(col("id_a"), col("id_b"), round(jac, 4).as("jaccard"))
-    (result, g2)
-  }
-
-  /** As [[jaccardPairs]] with the skew controls exposed. `hotDfCap` is the
-    * per-gram document frequency above which the self-join SALTS: a gram in
-    * k docs contributes C(k,2) pairs, and without salting every one of them
-    * materializes in the single shuffle bucket that gram hashes to — a
-    * pathological gram in 20% of the corpus serializes the whole join on
-    * one task. AQE's skew-join CANNOT rescue this plan: the df window sits
-    * between the shuffle and the join, so there is no raw shuffle read for
-    * it to split (verified against the final adaptive plan — the pin is
-    * `OperatorSpec`'s constructed-skew test). Instead, hot grams use the
-    * standard triangle-block decomposition: each hot row gets a
-    * deterministic salt s in [0,S); the left replica fans to blocks
-    * (s, j>=s), the right to (i<=s, s), and every within-gram pair meets in
-    * EXACTLY one (i, j) block — quadratic work spreads over S(S+1)/2
-    * shuffle keys at replication cost S on hot rows only.
+    * sf0.1. The df>=2 restriction is the part of that idea that pays for
+    * itself at any threshold.
+    *
+    * Skew controls: `hotDfCap` is the per-gram document frequency above
+    * which the self-join SALTS: a gram in k docs contributes C(k,2) pairs,
+    * and without salting every one of them materializes in the single
+    * shuffle bucket that gram hashes to — a pathological gram in 20% of the
+    * corpus serializes the whole join on one task. AQE's skew-join CANNOT
+    * rescue this plan: the df window sits between the shuffle and the join,
+    * so there is no raw shuffle read for it to split (verified against the
+    * final adaptive plan — the pin is `OperatorSpec`'s constructed-skew
+    * test). Instead, hot grams use the standard triangle-block
+    * decomposition: each hot row gets a deterministic salt s in [0,S); the
+    * left replica fans to blocks (s, j>=s), the right to (i<=s, s), and
+    * every within-gram pair meets in EXACTLY one (i, j) block — quadratic
+    * work spreads over S(S+1)/2 shuffle keys at replication cost S on hot
+    * rows only.
     *
     * The plan is a STATIC cold/hot union, so benign corpora pay nothing:
     * cold grams (df <= cap) self-join on `gram` alone, which the window's
@@ -275,25 +155,21 @@ object TextPipeline {
     * everything unconditionally and the two exploded-index exchanges cost a
     * measured ~0.25 s flat tax per run at sf0.1). No driver-side probe
     * decides the shape — both branches live in one plan and the data routes
-    * itself, which is also the only form that stays correct when a stream
-    * or a downstream reuse replays the plan on different data.
+    * itself, which is also the only form that stays correct when a stream,
+    * a downstream reuse or the prepared-plan cache replays the plan on
+    * different data.
+    *
+    * An eager "gated" batch form (localCheckpoint the gram index while the
+    * DataFrame is built, read max(df) off it, plan only the cold join on
+    * benign corpora) was measured against this one and deleted. Its one
+    * win (0.754 vs 0.826 s at sf0.1) predates the plan cache's memoized
+    * count path. Re-measured on a 4-core VM, this form is ahead: perfbench
+    * llm_pipeline `dedup_jaccard` per-shape p50 1337 -> 1060 ms (8
+    * interleaved pairs, ahead in 8 of 8), and `QueryTimer dedup_jaccard`
+    * at sf0.1 1.75 -> 1.51 s (median of 3 runs a side, 258 rows both).
     */
-  def jaccardPairs(d: DataFrame, threshold: Double, hotDfCap: Int,
-      salts: Int): DataFrame = {
-    val g = shingleHashes(d)
-    // Only grams appearing in >=2 docs can contribute to any intersection;
-    // df=1 grams — the bulk of a mostly-unique corpus — are dropped from
-    // BOTH join sides. Lossless: every shared gram has df >= 2, and union
-    // sizes still ride along from the unfiltered per-doc counts. Document
-    // frequency is a window count over the gram clustering the exchange
-    // already provides — NOT a separate aggregate branch + semi-join: the
-    // aggregate branch's copy of the exchange subtree gets column-pruned
-    // differently (no `n`), which defeats ReusedExchange and re-runs the
-    // whole scan+explode+hash pipeline (measured: two parallel 3+ s stages
-    // computing identical grams). Residual declared straggler: the window
-    // COUNT itself still processes a hot gram's group in one task — linear,
-    // unlike the join's quadratic, and the documented corpus-scale answer
-    // for pathological grams is MinHash banding upstream.
+  def jaccardPairs(d: DataFrame, threshold: Double, hotDfCap: Int = 1 << 12,
+      salts: Int = 16): DataFrame = {
     // The trailing repartition(gram) is a MATERIALIZATION point, not a data
     // movement (rows are already gram-clustered): four consumers hang off
     // g2 (both cold join sides, both hot join sides), and without an
@@ -305,10 +181,7 @@ object TextPipeline {
     // ReusedExchange reads of its OUTPUT; the exchange also provides
     // exactly the gram clustering the cold self-join needs, so
     // EnsureRequirements adds nothing there.
-    val g2 = g
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("gram")))
-      .filter(col("df") >= 2)
-      .repartition(col("gram"))
+    val g2 = sharedGrams(d).repartition(col("gram"))
     val cold = g2.filter(col("df") <= hotDfCap).drop("df")
     val hot = g2.filter(col("df") > hotDfCap).drop("df")
       .withColumn("salt", pmod(xxhash64(col("doc_id")), lit(salts)).cast("int"))
@@ -373,16 +246,12 @@ object TextPipeline {
     * inside a long one (the union is dominated by the long side); the
     * containment of the SHORT side is ~1 there — the quote/boilerplate-
     * inclusion dedup case. Same inverted-index pair shape as
-    * [[jaccardPairs]] (df>=2 prefilter, one gram clustering, shuffled hash
+    * [[jaccardPairs]] ([[sharedGrams]] index, one gram clustering, shuffled hash
     * self-join), with both per-side set sizes riding the pair keys; a
     * min-gram floor on the contained side keeps trivial tiny docs out.
     */
   def containmentPairs(d: DataFrame, threshold: Double, minGrams: Int): DataFrame = {
-    val g = shingleHashes(d)
-    val g2 = g
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("gram")))
-      .filter(col("df") >= 2)
-      .drop("df")
+    val g2 = sharedGrams(d).drop("df")
     val pairs = g2.as("a").hint("shuffle_hash").join(g2.as("b"),
         col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
@@ -617,10 +486,6 @@ object TextPipeline {
       .select(col("id_a"), col("id_b"), round(jac, 4).as("jaccard"))
   }
 
-  /** DuckDB oracle for `minhashCandidates` — same trigrams, same md5-derived
-    * hash, same permutations; band sharing expressed as an OR-join (equivalent
-    * to the bucket equi-join up to DISTINCT, and fine at oracle scale).
-    */
   /** Shared DuckDB CTE chain: trigrams -> hm -> 16-min signature -> band
     * ids -> `cand(id_a, id_b)` — the same hash family as the Spark side;
     * band sharing expressed as an OR-join (equivalent to the bucket
@@ -675,32 +540,6 @@ object TextPipeline {
       "SELECT doc_id, CAST(SUM(CASE WHEN v > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS simhash " +
       "FROM v GROUP BY doc_id ORDER BY doc_id"
 
-  /** End-to-end corpus cleaning — the composition a training-data pipeline
-    * actually runs: quality gate (token count + stopword ratio) → MinHash-LSH
-    * candidate generation on the survivors → exact Jaccard verification of
-    * the candidates only → drop the higher doc_id of each confirmed pair →
-    * surviving corpus.
-    *
-    * Scale shape: the only super-linear step is the within-bucket pair
-    * generation, O(docs x bands) rows in — the all-pairs exact Jaccard never
-    * runs. ONE aggregation on the doc_id clustering `triRows` established
-    * produces everything the pipeline needs per doc — the distinct gram-id
-    * array (for the exact verify), its size, and all 16 permutation minima
-    * (the MinHash signature) — so no gram-keyed exchange exists at all: the
-    * arrays ride the band-bucket grouping and candidate verification is an inline
-    * `array_intersect`, not a pair of inverted-index probe joins. (The r3
-    * probe-join form re-read its shared shingle exchange four times and
-    * chained 11 stages; this shape is 3 exchanges — docs, buckets, dup ids —
-    * and the bucket shuffle carries bands x gram-array bytes, comparable to
-    * the two probe shuffles it replaces.) Per-row state is O(grams/doc) —
-    * bounded by document length, never by corpus size; for a corpus of
-    * pathologically huge single documents the inverted-index verifier
-    * (`verifyJaccard`) remains the fallback shape.
-    * The DuckDB oracle replicates the same LSH-then-verify algorithm, so the
-    * check is value-exact by construction, not by luck of recall (on these
-    * fixtures recall is total anyway: every jaccard>=0.5 pair sits at >=0.9,
-    * where the 8-band miss probability is ~2e-7).
-    */
   /** Per-doc LSH state in one aggregation on the `triRows` clustering, then
     * band-bucket rows: (doc_id, band, bucket, gs, n) where `gs` is the
     * distinct gram-id array (for inline exact verification) and `n` its
@@ -728,6 +567,32 @@ object TextPipeline {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
   }
 
+  /** End-to-end corpus cleaning — the composition a training-data pipeline
+    * actually runs: quality gate (token count + stopword ratio) → MinHash-LSH
+    * candidate generation on the survivors → exact Jaccard verification of
+    * the candidates only → drop the higher doc_id of each confirmed pair →
+    * surviving corpus.
+    *
+    * Scale shape: the only super-linear step is the within-bucket pair
+    * generation, O(docs x bands) rows in — the all-pairs exact Jaccard never
+    * runs. ONE aggregation on the doc_id clustering `triRows` established
+    * produces everything the pipeline needs per doc — the distinct gram-id
+    * array (for the exact verify), its size, and all 16 permutation minima
+    * (the MinHash signature) — so no gram-keyed exchange exists at all: the
+    * arrays ride the band-bucket grouping and candidate verification is an inline
+    * `array_intersect`, not a pair of inverted-index probe joins. (The r3
+    * probe-join form re-read its shared shingle exchange four times and
+    * chained 11 stages; this shape is 3 exchanges — docs, buckets, dup ids —
+    * and the bucket shuffle carries bands x gram-array bytes, comparable to
+    * the two probe shuffles it replaces.) Per-row state is O(grams/doc) —
+    * bounded by document length, never by corpus size; for a corpus of
+    * pathologically huge single documents the inverted-index verifier
+    * (`verifyJaccard`) remains the fallback shape.
+    * The DuckDB oracle replicates the same LSH-then-verify algorithm, so the
+    * check is value-exact by construction, not by luck of recall (on these
+    * fixtures recall is total anyway: every jaccard>=0.5 pair sits at >=0.9,
+    * where the 8-band miss probability is ~2e-7).
+    */
   def cleanCorpus(d: DataFrame, minTokens: Int, minStopRatio: Double,
       dupThreshold: Double,
       stopwords: Seq[String] = Seq("the", "a", "of", "and", "in")): DataFrame = {
@@ -1075,15 +940,7 @@ object TextPipeline {
         .orderBy("source", "doc_id")
     },
 
-    // The PUBLIC default is the lazy static union (r11 ADVICE: no eager jobs
-    // from a default overload); this op EXPLICITLY opts into the gated shape
-    // — the r12 same-window interleaved A/B (5 rounds; ARCHITECTURE.md at
-    // 7f0c93f) read gated 0.754 s vs static 0.826 s median, confirming r11's
-    // in-window direction; the cross-round official regression was window
-    // noise (the banked protocol's known host asymmetry). Op.eager: the
-    // gated probe runs jobs at build time, so the instance must not be
-    // plan-cached.
-    Op.eager("dedup_jaccard",
+    Op("dedup_jaccard",
       "WITH w AS (SELECT doc_id, STRING_SPLIT(text,' ') AS words FROM documents), " +
       "g AS (SELECT DISTINCT doc_id, UNNEST(LIST_TRANSFORM(GENERATE_SERIES(1, CAST(LEN(words) AS INTEGER)-2), i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])) AS gram FROM w), " +
       "sz AS (SELECT doc_id, COUNT(*) AS n FROM g GROUP BY doc_id), " +
@@ -1091,8 +948,7 @@ object TextPipeline {
       "SELECT id_a, id_b, ROUND(CAST(inter AS DOUBLE)/(sa.n+sb.n-inter),4) AS jaccard FROM pairs " +
       "JOIN sz sa ON sa.doc_id=id_a JOIN sz sb ON sb.doc_id=id_b " +
       "WHERE CAST(inter AS DOUBLE)/(sa.n+sb.n-inter) >= 0.12 ORDER BY id_a, id_b") { (s, d) =>
-      jaccardPairsGated(docs(s, d), 0.12, hotDfCap = 1 << 12, salts = 16)
-        .orderBy("id_a", "id_b")
+      jaccardPairs(docs(s, d), 0.12).orderBy("id_a", "id_b")
     },
 
     // Bloom-filter ingest gate: the cheap membership pre-filter in front of

@@ -57,14 +57,6 @@ object GraftDatasetShim {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
-  /** Non-blocking read of an Observation's metrics (`getOrEmpty` is
-    * `private[sql]`): empty until the observed query's SQLExecutionEnd event
-    * has been delivered on the async listener bus. Callers poll this with a
-    * deadline instead of `obs.get`, whose bare wait would hang forever if
-    * the bounded listener queue dropped the event under load.
-    */
-  def observedOrEmpty(obs: Observation): Map[String, Any] = obs.getOrEmpty
-
   /** Hand `f` the rows of `df` in partition order, fetched from the
     * dataset's EXISTING executed plan (a cached statement keeps its finished
     * stages) by one Spark job per window of result partitions.

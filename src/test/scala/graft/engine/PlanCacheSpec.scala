@@ -501,6 +501,22 @@ class PlanCacheSpec extends AnyFunSuite {
     assert(graft.sources.ArrowIO.fromArrowStream(s, bytes).collect().map(_.getString(0)).contains("default"))
   }
 
+  test("dedup_jaccard builds without a Spark job and its count is memoized") {
+    val s = spark.newSession()
+    val dir = graft.SparkTestHarness.sfDir
+    graft.Tables.ensure(s, dir)
+    val op = graft.SparkEntry.allOps.find(_.name == "dedup_jaccard").get
+    // A lazy plan: the DataFrame exists before anything runs, so the plan
+    // cache may hold it.
+    val (df, n) = countingJobs(s)(op.run(s, dir))
+    assert(n == 0, s"building dedup_jaccard ran $n Spark jobs")
+    assert(op.cacheable, "dedup_jaccard must go through the plan cache")
+    val count = graft.SparkEntry.countQueries("dedup_jaccard")
+    val first = count(s, dir)
+    assert(count(s, dir) == first)
+    assert(first == df.count())
+  }
+
   // ---- prepared executes ---------------------------------------------------
 
   private lazy val global = new GlobalSettings
