@@ -993,10 +993,10 @@ object Statement {
     *
     * BOUNDED RESULTS ONLY: this materializes the full result on the driver
     * via `collect()` — it exists for the CLI/tests/demo. The serving path
-    * streams batches without driver materialization
-    * ([[graft.server.GraftHttpServer]] + `ArrowIO.writeArrowStream`, one
-    * job per window of result partitions); never put this method on a wire
-    * path.
+    * streams Arrow batches encoded on the executors without driver
+    * materialization ([[graft.server.GraftHttpServer]] +
+    * `ArrowIO.writeArrowStream`, one job per window of result partitions);
+    * never put this method on a wire path.
     */
   def run(
       sessions: SessionManager,

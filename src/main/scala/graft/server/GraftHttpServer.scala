@@ -30,10 +30,11 @@ import scala.language.implicitConversions
   *  - GET  /healthz  200 SERVING / 503 NOT_SERVING (background prober)
   *  - POST /close    close the caller's session
   *
-  * Result bodies stream: both the Arrow and the JSON encodings write chunked
+  * Result bodies stream: the executors encode each result partition as
+  * Arrow record batches or JSON objects, and the body is written chunked
   * from one Spark job per window of result partitions, each window bounded
   * by `defaultParallelism` partitions and by a byte budget
-  * (`GraftDatasetShim.withResultRows`), so a SELECT larger than driver
+  * (`GraftDatasetShim.withResultRecords`), so a SELECT larger than driver
   * memory never materializes on the driver (one window resident at a time). With `tls` set, the same endpoints serve HTTPS via the JDK's
   * `HttpsServer` — the reference's TLS listener
   * (`gizmosql_library.cpp:497-560`, cert/key material under `tls/`); a

@@ -3,11 +3,15 @@ package graft.sources
 import graft.types.TypeMapping
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.{ListVector, MapVector, StructVector}
-import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
+import org.apache.arrow.vector.complex.{FixedSizeListVector, ListVector, MapVector, StructVector}
+import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter, WriteChannel}
+import org.apache.arrow.vector.ipc.message.{IpcOption, MessageSerializer}
+import org.apache.arrow.vector.types.TimeUnit
+import org.apache.arrow.vector.types.pojo.ArrowType
 import org.apache.spark.sql.{DataFrame, GraftDatasetShim, Row, SparkSession}
 import org.apache.spark.sql.types._
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 
 /** Arrow IPC stream export/import — the wire format of the reference's
@@ -16,14 +20,14 @@ import scala.jdk.CollectionConverters._
   * this environment the transport stops at IPC stream bytes; a Flight SQL
   * endpoint would wrap these calls 1:1.
   *
-  * Results come from `GraftDatasetShim.withResultRows`: one Spark job per
-  * window of at most `defaultParallelism` result partitions and a byte
-  * budget, in partition order, so the driver holds one window of rows (as
-  * UnsafeRow bytes) plus the `batchSize` rows being encoded.
+  * Results come from `GraftDatasetShim.withResultArrow`: Spark's
+  * `ArrowWriter` encodes the record batches on the executors, and they reach
+  * the driver by one Spark job per window of at most `defaultParallelism`
+  * result partitions and a byte budget, in partition order. The driver only
+  * writes the schema message, copies the batch messages and ends the stream.
   *
-  * Value coverage: all atomic types, arrays of atomics, structs of atomics,
-  * and maps with atomic keys/values (schema mapping in
-  * [[graft.types.TypeMapping]]; deeper nesting throws a clear error).
+  * Value coverage: every type [[graft.types.TypeMapping]] maps, nested to
+  * any depth (arrays, structs, maps).
   */
 object ArrowIO {
 
@@ -62,127 +66,20 @@ object ArrowIO {
 
   /** Stream a DataFrame as an Arrow IPC stream directly onto `out` — the
     * transport path for results larger than driver memory: one fetch window
-    * and one `batchSize` batch are resident at a time, each batch written as
-    * it fills. Returns the number of rows streamed (instrumentation's
+    * of encoded batches is resident at a time, each batch of at most
+    * `batchSize` rows. Returns the number of rows streamed (instrumentation's
     * rows_fetched).
     */
   def writeArrowStream(df: DataFrame, out: java.io.OutputStream, batchSize: Int = 4096): Long = {
-    val schema = df.schema
-    val arrowSchema = TypeMapping.toArrowSchema(schema, geometryOutputs(df))
-    val allocator = new RootAllocator()
-    val root = VectorSchemaRoot.create(arrowSchema, allocator)
-    val writer = new ArrowStreamWriter(root, null, out)
-    var total = 0L
-    try {
-      writer.start()
-      GraftDatasetShim.withResultRows(df) { it =>
-        val buffer = new scala.collection.mutable.ArrayBuffer[Row](batchSize)
-        def flush(): Unit = if (buffer.nonEmpty) {
-          root.allocateNew()
-          buffer.zipWithIndex.foreach { case (row, i) => writeRow(root, schema, row, i) }
-          root.setRowCount(buffer.size)
-          writer.writeBatch()
-          total += buffer.size
-          buffer.clear()
-        }
-        while (it.hasNext) {
-          buffer += it.next()
-          if (buffer.size >= batchSize) flush()
-        }
-        flush()
-      }
-      writer.end()
-      total
-    } finally {
-      writer.close(); root.close(); allocator.close()
-    }
+    val schema = TypeMapping.toArrowSchema(df.schema, geometryOutputs(df))
+    val channel = new WriteChannel(java.nio.channels.Channels.newChannel(out))
+    MessageSerializer.serialize(channel, schema)
+    val rows = GraftDatasetShim.withResultArrow(df, schema, batchSize)(_.foldLeft(0L) {
+      case (total, (batchRows, message)) => channel.write(message); total + batchRows
+    })
+    ArrowStreamWriter.writeEndOfStream(channel, IpcOption.DEFAULT)
+    rows
   }
-
-  private def writeRow(root: VectorSchemaRoot, schema: StructType, row: Row, i: Int): Unit = {
-    schema.fields.zipWithIndex.foreach { case (f, c) =>
-      val vec = root.getVector(c)
-      if (row.isNullAt(c)) vec.asInstanceOf[FieldVector].setNull(i)
-      else writeAny(vec, f.dataType, row.get(c), i)
-    }
-  }
-
-  private def writeAny(vec: FieldVector, dt: DataType, value: Any, i: Int): Unit =
-    (vec, dt) match {
-      case (v: BitVector, BooleanType) => v.setSafe(i, if (value.asInstanceOf[Boolean]) 1 else 0)
-      case (v: TinyIntVector, ByteType) => v.setSafe(i, value.asInstanceOf[Byte])
-      case (v: SmallIntVector, ShortType) => v.setSafe(i, value.asInstanceOf[Short])
-      case (v: IntVector, IntegerType) => v.setSafe(i, value.asInstanceOf[Int])
-      case (v: BigIntVector, LongType) => v.setSafe(i, value.asInstanceOf[Long])
-      case (v: Float4Vector, FloatType) => v.setSafe(i, value.asInstanceOf[Float])
-      case (v: Float8Vector, DoubleType) => v.setSafe(i, value.asInstanceOf[Double])
-      case (v: DecimalVector, _: DecimalType) =>
-        v.setSafe(i, value.asInstanceOf[java.math.BigDecimal])
-      case (v: VarCharVector, StringType) =>
-        v.setSafe(i, value.asInstanceOf[String].getBytes("UTF-8"))
-      case (v: VarBinaryVector, BinaryType) => v.setSafe(i, value.asInstanceOf[Array[Byte]])
-      case (v: DateDayVector, DateType) =>
-        v.setSafe(i, value.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt)
-      case (v: TimeStampMicroVector, TimestampNTZType) =>
-        val ldt = value.asInstanceOf[java.time.LocalDateTime]
-        v.setSafe(i, ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L)
-      case (v: TimeStampMicroTZVector, TimestampType) =>
-        val ts = value.asInstanceOf[java.sql.Timestamp]
-        v.setSafe(i, ts.getTime * 1000L + (ts.getNanos % 1000000) / 1000L)
-      case (v: MapVector, MapType(kt, vt, _)) =>
-        val entries = value.asInstanceOf[scala.collection.Map[Any, Any]]
-        val w = v.getWriter
-        w.setPosition(i)
-        w.startMap()
-        entries.foreach { case (k, mv) =>
-          w.startEntry()
-          writeScalar(w.key(), kt, k)
-          writeScalar(w.value(), vt, mv)
-          w.endEntry()
-        }
-        w.endMap()
-      case (v: StructVector, StructType(fields)) =>
-        val struct = value.asInstanceOf[Row]
-        fields.zipWithIndex.foreach { case (f, j) =>
-          val child = v.getChild(f.name)
-          if (struct.isNullAt(j)) child.setNull(i)
-          else writeAny(child, f.dataType, struct.get(j), i)
-        }
-        v.setIndexDefined(i)
-      case (v: ListVector, ArrayType(elem, _)) =>
-        val values = value.asInstanceOf[scala.collection.Seq[Any]]
-        val w = v.getWriter
-        w.setPosition(i)
-        w.startList()
-        values.foreach { x => writeScalar(w, elem, x) }
-        w.endList()
-      case other =>
-        throw new IllegalArgumentException(s"Arrow export unsupported for $dt -> ${other._1.getClass}")
-    }
-
-  /** Scalar write through any BaseWriter (list elements, map keys/values).
-    * Nulls must be written explicitly — casting null to a primitive would
-    * silently corrupt the wire value to 0.
-    */
-  private def writeScalar(w: org.apache.arrow.vector.complex.writer.BaseWriter.ListWriter,
-      dt: DataType, x: Any): Unit =
-    if (x == null) dt match {
-      case BooleanType => w.bit().writeNull()
-      case IntegerType => w.integer().writeNull()
-      case LongType => w.bigInt().writeNull()
-      case FloatType => w.float4().writeNull()
-      case DoubleType => w.float8().writeNull()
-      case StringType => w.varChar().writeNull()
-      case other => throw new IllegalArgumentException(s"Arrow nested null unsupported for $other")
-    } else dt match {
-      case BooleanType => w.bit().writeBit(if (x.asInstanceOf[Boolean]) 1 else 0)
-      case IntegerType => w.integer().writeInt(x.asInstanceOf[Int])
-      case LongType => w.bigInt().writeBigInt(x.asInstanceOf[Long])
-      case FloatType => w.float4().writeFloat4(x.asInstanceOf[Float])
-      case DoubleType => w.float8().writeFloat8(x.asInstanceOf[Double])
-      case StringType =>
-        w.varChar().writeVarChar(new org.apache.arrow.vector.util.Text(x.asInstanceOf[String]))
-      case other => throw new IllegalArgumentException(s"Arrow nested-scalar export unsupported for $other")
-    }
 
   /** Import an Arrow IPC stream into a DataFrame (the ingest direction):
     * schema via TypeMapping, values batch-by-batch.
@@ -205,46 +102,66 @@ object ArrowIO {
     }
   }
 
-  private def readValue(vec: FieldVector, dt: DataType, i: Int): Any = {
-    if (vec.isNull(i)) return null
-    (vec, dt) match {
-      case (v: BitVector, BooleanType) => v.get(i) == 1
-      case (v: TinyIntVector, ByteType) => v.get(i)
-      case (v: SmallIntVector, ShortType) => v.get(i)
-      case (v: IntVector, IntegerType) => v.get(i)
-      case (v: BigIntVector, LongType) => v.get(i)
-      case (v: Float4Vector, FloatType) => v.get(i)
-      case (v: Float8Vector, DoubleType) => v.get(i)
-      case (v: DecimalVector, _: DecimalType) => v.getObject(i)
-      case (v: VarCharVector, StringType) => new String(v.get(i), "UTF-8")
-      case (v: VarBinaryVector, BinaryType) => v.get(i)
-      case (v: DateDayVector, DateType) => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(v.get(i)))
-      case (v: TimeStampMicroVector, TimestampNTZType) =>
-        java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(v.get(i), 1000000L),
-          (Math.floorMod(v.get(i), 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
-      case (v: TimeStampMicroTZVector, TimestampType) =>
-        val micros = v.get(i)
-        val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000L))
-        ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-        ts
+  /** Value `i` of `vec` as the external type of `dt`, widened as
+    * [[graft.types.TypeMapping.fromArrowType]] declares: unsigned integers
+    * widen one step (uint64 narrows to long), ns truncates to µs, TIME reads
+    * as a timestamp_ntz on 1970-01-01, duration as a day-time interval.
+    */
+  private def readValue(vec: ValueVector, dt: DataType, i: Int): Any =
+    if (vec.isNull(i)) null else (vec, dt) match {
+      case (v: BitVector, _) => v.get(i) == 1
+      case (v: BaseIntVector, ByteType) => v.getValueAsLong(i).toByte
+      case (v: BaseIntVector, ShortType) => v.getValueAsLong(i).toShort
+      case (v: BaseIntVector, IntegerType) => v.getValueAsLong(i).toInt
+      case (v: BaseIntVector, LongType) => v.getValueAsLong(i)
+      case (v: Float4Vector, _) => v.get(i)
+      case (v: Float8Vector, _) => v.get(i)
+      case (v: DecimalVector, _) => v.getObject(i)
+      case (v: Decimal256Vector, _) => v.getObject(i)
+      case (v: VariableWidthFieldVector, StringType) => new String(v.get(i), UTF_8)
+      case (v: VariableWidthFieldVector, BinaryType) => v.get(i)
+      case (v: FixedSizeBinaryVector, _) => v.get(i)
+      case (v: DateDayVector, _) => date(v.get(i))
+      case (v: DateMilliVector, _) => date(Math.floorDiv(v.get(i), 86400000L))
+      case (v: TimeStampVector, _) =>
+        val micros = toMicros(v.get(i), v.getField.getType.asInstanceOf[ArrowType.Timestamp].getUnit)
+        if (dt == TimestampType) timestamp(micros) else localDateTime(micros)
+      case (v: TimeSecVector, _) => localDateTime(toMicros(v.get(i), TimeUnit.SECOND))
+      case (v: TimeMilliVector, _) => localDateTime(toMicros(v.get(i), TimeUnit.MILLISECOND))
+      case (v: TimeMicroVector, _) => localDateTime(v.get(i))
+      case (v: TimeNanoVector, _) => localDateTime(toMicros(v.get(i), TimeUnit.NANOSECOND))
+      case (v: DurationVector, _) => v.getObject(i)
+      case (v: IntervalDayVector, _) => v.getObject(i)
       case (v: MapVector, MapType(kt, vt, _)) =>
-        v.getObject(i).asInstanceOf[java.util.List[_]].asScala.map { e =>
-          val m = e.asInstanceOf[java.util.Map[String, AnyRef]]
-          fromArrowObject(m.get(MapVector.KEY_NAME), kt) -> fromArrowObject(m.get(MapVector.VALUE_NAME), vt)
+        val entries = v.getDataVector.asInstanceOf[StructVector]
+        (v.getElementStartIndex(i) until v.getElementEndIndex(i)).map { j =>
+          readValue(entries.getChildByOrdinal(0), kt, j) -> readValue(entries.getChildByOrdinal(1), vt, j)
         }.toMap
       case (v: StructVector, StructType(fields)) =>
-        val m = v.getObject(i).asInstanceOf[java.util.Map[String, AnyRef]]
-        Row.fromSeq(fields.toSeq.map(f => fromArrowObject(m.get(f.name), f.dataType)))
+        Row.fromSeq(fields.indices.map(j => readValue(v.getChildByOrdinal(j), fields(j).dataType, i)))
       case (v: ListVector, ArrayType(elem, _)) =>
-        v.getObject(i).asScala.toSeq.map(x => fromArrowObject(x.asInstanceOf[AnyRef], elem))
-      case other => throw new IllegalArgumentException(s"Arrow import unsupported for $dt")
+        (v.getElementStartIndex(i) until v.getElementEndIndex(i)).map(readValue(v.getDataVector, elem, _))
+      case (v: FixedSizeListVector, ArrayType(elem, _)) =>
+        (i * v.getListSize until (i + 1) * v.getListSize).map(readValue(v.getDataVector, elem, _))
+      case _ => throw new IllegalArgumentException(s"Arrow import unsupported for $dt from ${vec.getField}")
     }
+
+  private def toMicros(x: Long, unit: TimeUnit): Long = unit match {
+    case TimeUnit.SECOND => x * 1000000L
+    case TimeUnit.MILLISECOND => x * 1000L
+    case TimeUnit.MICROSECOND => x
+    case TimeUnit.NANOSECOND => Math.floorDiv(x, 1000L)
   }
 
-  /** Convert a raw Arrow getObject value to the Spark-facing value. */
-  private def fromArrowObject(x: AnyRef, dt: DataType): Any = x match {
-    case null => null
-    case t: org.apache.arrow.vector.util.Text => t.toString
-    case other => other
+  private def date(days: Long): java.sql.Date = java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(days))
+
+  private def localDateTime(micros: Long): java.time.LocalDateTime =
+    java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(micros, 1000000L),
+      (Math.floorMod(micros, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
+
+  private def timestamp(micros: Long): java.sql.Timestamp = {
+    val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000L))
+    ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
+    ts
   }
 }

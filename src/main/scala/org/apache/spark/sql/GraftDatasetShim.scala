@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.arrow.vector.types.pojo.Schema
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge to the package-private `Dataset.ofRows`, the one Spark API that
@@ -57,59 +58,61 @@ object GraftDatasetShim {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
-  /** Hand `f` the rows of `df` in partition order, fetched from the
-    * dataset's EXISTING executed plan (a cached statement keeps its finished
-    * stages) by one Spark job per window of result partitions.
-    * `toLocalIterator` runs one job per partition, in sequence; `collect` one
-    * job for all of them, resident at once. Here a window holds at most
-    * `defaultParallelism` partitions and at most [[resultBudget]] bytes, so
-    * the driver holds one window's rows, each as its UnsafeRow bytes.
-    *
-    * Windows are sized by bytes as the fetch goes: each is as wide as the
-    * budget allows at the largest partition seen so far, and each partition
-    * of a window may ship at most its share of the budget. A partition that
-    * outgrows its share is dropped from that job and fetched again alone, as
-    * `toLocalIterator` would have fetched it. A small result therefore takes
-    * one job, and a large one never ships more than the budget in one job
-    * (`spark.driver.maxResultSize` applies per job).
-    *
-    * The fetch is one SQL execution (listeners and the UI see it like a
-    * `collect`) and its jobs carry the calling thread's job group, so
-    * cancelling the group stops it. A command's result, already on the
-    * driver, takes no job.
+  /** Hand `f` the rows of `df` as Arrow IPC record-batch messages, with the
+    * row count of each, in partition order. Spark's `ArrowWriter` fills the
+    * vectors of `schema` on the executors, so each batch body matches the
+    * schema message a stream declares for it. A batch holds at most
+    * `batchSize` rows and never spans two partitions.
     */
-  def withResultRows[A](df: DataFrame)(f: Iterator[Row] => A): A = {
-    import catalyst.expressions.{UnsafeProjection, UnsafeRow}
-    val fromRow = df.asInstanceOf[classic.Dataset[Row]].exprEnc.resolveAndBind().createDeserializer()
-    val schema = df.schema
-    val writeRow = () => {
-      lazy val toUnsafe = UnsafeProjection.create(schema)
-      val buffer = new Array[Byte](4096)
-      (r: catalyst.InternalRow, out: java.io.DataOutputStream) => {
-        val u = r match { case u: UnsafeRow => u; case o => toUnsafe(o) }
-        out.writeInt(u.getSizeInBytes)
-        u.writeToStream(out, buffer)
+  def withResultArrow[A](df: DataFrame, schema: Schema, batchSize: Int)(
+      f: Iterator[(Int, java.nio.ByteBuffer)] => A): A = {
+    import org.apache.arrow.vector.{VectorSchemaRoot, VectorUnloader}
+    import org.apache.arrow.vector.ipc.WriteChannel
+    import org.apache.arrow.vector.ipc.message.MessageSerializer
+    import org.apache.spark.sql.util.ArrowUtils
+    val json = schema.toJson
+    val writeArrow = () => new RecordWriter {
+      private val allocator = ArrowUtils.rootAllocator.newChildAllocator("graft-result", 0, Long.MaxValue)
+      private val root = VectorSchemaRoot.create(Schema.fromJSON(json), allocator)
+      private val arrow = execution.arrow.ArrowWriter.create(root)
+      private var rows = 0
+      def write(r: catalyst.InternalRow, out: java.io.DataOutputStream): Unit = {
+        arrow.write(r)
+        rows += 1
+        if (rows == batchSize) finish(out)
       }
+      // record: row count, then the serialized record-batch message
+      override def finish(out: java.io.DataOutputStream): Unit = if (rows > 0) {
+        arrow.finish()
+        val message = new java.io.ByteArrayOutputStream()
+        val batch = new VectorUnloader(root).getRecordBatch
+        try MessageSerializer.serialize(new WriteChannel(java.nio.channels.Channels.newChannel(message)), batch)
+        finally batch.close()
+        out.writeInt(4 + message.size)
+        out.writeInt(rows)
+        message.writeTo(out)
+        arrow.reset()
+        rows = 0
+      }
+      override def close(): Unit = { root.close(); allocator.close() }
     }
-    withResultRecords(df)(writeRow)(records => f(records.map { b =>
-      val row = new UnsafeRow(schema.length)
-      row.pointTo(b, b.length)
-      fromRow(row)
+    withResultRecords(df)(writeArrow)(records => f(records.map { b =>
+      (java.nio.ByteBuffer.wrap(b).getInt, java.nio.ByteBuffer.wrap(b, 4, b.length - 4))
     }))
   }
 
-  /** [[withResultRows]] with each row as the JSON object `Dataset.toJSON`
-    * writes, encoded on the executors.
+  /** Hand `f` the rows of `df` as the JSON objects `Dataset.toJSON` writes,
+    * encoded on the executors.
     */
   def withResultJson[A](df: DataFrame)(f: Iterator[String] => A): A = {
     import java.nio.charset.StandardCharsets.UTF_8
     val schema = df.schema
     val tz = df.sparkSession.sessionState.conf.sessionLocalTimeZone
-    val writeJson = () => {
-      val writer = new java.io.CharArrayWriter()
-      val gen = new catalyst.json.JacksonGenerator(schema, writer,
+    val writeJson = () => new RecordWriter {
+      private val writer = new java.io.CharArrayWriter()
+      private val gen = new catalyst.json.JacksonGenerator(schema, writer,
         new catalyst.json.JSONOptions(Map.empty[String, String], tz))
-      (r: catalyst.InternalRow, out: java.io.DataOutputStream) => {
+      def write(r: catalyst.InternalRow, out: java.io.DataOutputStream): Unit = {
         gen.write(r)
         gen.flush()
         val b = writer.toString.getBytes(UTF_8)
@@ -121,8 +124,14 @@ object GraftDatasetShim {
     withResultRecords(df)(writeJson)(records => f(records.map(new String(_, UTF_8))))
   }
 
-  // Writes one row as a length-framed record. Made per task, on the executor.
-  private type RecordWriter = (catalyst.InternalRow, java.io.DataOutputStream) => Unit
+  /** Writes rows as length-framed records. Made per task, on the executor. */
+  private trait RecordWriter {
+    def write(row: catalyst.InternalRow, out: java.io.DataOutputStream): Unit
+    /** Writes what is still buffered, at partition end. */
+    def finish(out: java.io.DataOutputStream): Unit = ()
+    /** Releases what the writer holds, whether or not the partition finished. */
+    def close(): Unit = ()
+  }
 
   /** Bytes one fetch job may bring to the driver: half of
     * `spark.driver.maxResultSize` (the rest covers each task's metrics), and
@@ -137,15 +146,14 @@ object GraftDatasetShim {
   /** One partition's rows as length-framed records, or null once they pass
     * `cap` bytes.
     */
-  private def frame(rows: Iterator[catalyst.InternalRow], write: RecordWriter, cap: Long): Array[Byte] = {
+  private def frame(rows: Iterator[catalyst.InternalRow], writer: RecordWriter, cap: Long): Array[Byte] = {
     val bytes = new java.io.ByteArrayOutputStream()
     val out = new java.io.DataOutputStream(bytes)
-    while (rows.hasNext) {
-      write(rows.next(), out)
-      if (out.size > cap) return null
-    }
-    out.flush()
-    bytes.toByteArray
+    try {
+      while (rows.hasNext && out.size <= cap) writer.write(rows.next(), out)
+      if (out.size <= cap) writer.finish(out)
+    } finally writer.close()
+    if (out.size > cap) null else bytes.toByteArray
   }
 
   private def unframe(bytes: Array[Byte]): Iterator[Array[Byte]] = {
@@ -157,6 +165,27 @@ object GraftDatasetShim {
     }
   }
 
+  /** Hand `f` the records `writer` makes of the rows of `df`, in partition
+    * order, fetched from the dataset's EXISTING executed plan (a cached
+    * statement keeps its finished stages) by one Spark job per window of
+    * result partitions. `toLocalIterator` runs one job per partition, in
+    * sequence; `collect` one job for all of them, resident at once. Here a
+    * window holds at most `defaultParallelism` partitions and at most
+    * [[resultBudget]] bytes, so the driver holds one window's records.
+    *
+    * Windows are sized by bytes as the fetch goes: each is as wide as the
+    * budget allows at the largest partition seen so far, and each partition
+    * of a window may ship at most its share of the budget. A partition that
+    * outgrows its share is dropped from that job and fetched again alone, as
+    * `toLocalIterator` would have fetched it. A small result therefore takes
+    * one job, and a large one never ships more than the budget in one job
+    * (`spark.driver.maxResultSize` applies per job).
+    *
+    * The fetch is one SQL execution (listeners and the UI see it like a
+    * `collect`) and its jobs carry the calling thread's job group, so
+    * cancelling the group stops it. A command's result, already on the
+    * driver, takes no job.
+    */
   private def withResultRecords[A](df: DataFrame)(writer: () => RecordWriter)(
       f: Iterator[Array[Byte]] => A): A = {
     val qe = df.queryExecution

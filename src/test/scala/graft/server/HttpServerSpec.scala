@@ -91,6 +91,13 @@ class HttpServerSpec extends AnyFunSuite {
     assert(rows.length == 5 && rows.head == (0 -> "AFRICA"))
   }
 
+  test("a nested DATE value comes back over /sql as Arrow") {
+    val resp = post("/sql", "SELECT array(DATE '2024-01-15') AS d", "Authorization" -> s"Bearer $token")
+    assert(resp.statusCode() == 200)
+    val rows = ArrowIO.fromArrowStream(spark, resp.body()).collect()
+    assert(rows.map(_.getSeq[java.sql.Date](0)).toSeq == Seq(Seq(java.sql.Date.valueOf("2024-01-15"))))
+  }
+
   test("Accept: application/json returns a JSON row array") {
     val resp = post("/sql", "SELECT COUNT(*) AS n FROM region",
       "Authorization" -> s"Bearer $token", "Accept" -> "application/json")

@@ -203,8 +203,108 @@ class ArrowIOSpec extends AnyFunSuite {
 
   test("batching splits large results without losing rows") {
     val df = spark.range(0, 10000).select(col("id"), (col("id") * 2).as("dbl"))
-    val back = ArrowIO.fromArrowStream(spark, ArrowIO.toArrowStream(df, batchSize = 512))
+    val bytes = ArrowIO.toArrowStream(df, batchSize = 512)
+    val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+      new java.io.ByteArrayInputStream(bytes), new org.apache.arrow.memory.RootAllocator())
+    val batchRows = try Iterator.continually(reader.loadNextBatch()).takeWhile(identity)
+      .map(_ => reader.getVectorSchemaRoot.getRowCount).toList finally reader.close()
+    assert(batchRows.forall(_ <= 512), batchRows)
+    assert(batchRows.sum == 10000)
+    val back = ArrowIO.fromArrowStream(spark, bytes)
     assert(back.count() == 10000)
     assert(back.agg(sum("dbl")).collect().head.getLong(0) == (0L until 10000L).map(_ * 2).sum)
+  }
+
+  test("nested values of every element type round-trip through export and import") {
+    val df = spark.sql("""SELECT
+      array(DATE '2024-01-15', NULL) AS dates,
+      array(array(1, 2), NULL, array(3)) AS nested,
+      array(CAST(1.25 AS DECIMAL(10, 2)), CAST(-7.5 AS DECIMAL(10, 2))) AS decs,
+      array(named_struct('x', 1, 's', 'a'), named_struct('x', 2, 's', CAST(NULL AS STRING))) AS structs,
+      map('k', array(1.5D, NULL), 'e', CAST(array() AS ARRAY<DOUBLE>)) AS m,
+      array(TIMESTAMP_NTZ '2024-01-15 10:30:05.123456') AS tss,
+      TIMESTAMP '2024-01-15 10:30:05.123456' AS ts""")
+    val back = ArrowIO.fromArrowStream(spark, ArrowIO.toArrowStream(df))
+    assert(back.schema.map(_.dataType) == df.schema.map(_.dataType))
+    assert(back.collect().toSeq == df.collect().toSeq)
+  }
+
+  test("ingest reads every Arrow type TypeMapping declares, with its widening") {
+    import org.apache.arrow.vector._
+    import org.apache.arrow.vector.complex.{FixedSizeListVector, ListVector}
+    import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, IntervalUnit, TimeUnit}
+    import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
+    def field(name: String, t: ArrowType, children: Field*) =
+      new Field(name, FieldType.nullable(t), children.asJava)
+    val schema = new Schema(Seq(
+      field("u8", new ArrowType.Int(8, false)),
+      field("u64", new ArrowType.Int(64, false)),
+      field("ts_ns", new ArrowType.Timestamp(TimeUnit.NANOSECOND, null)),
+      field("t_us", new ArrowType.Time(TimeUnit.MICROSECOND, 64)),
+      field("ls", ArrowType.LargeUtf8.INSTANCE),
+      field("fsb", new ArrowType.FixedSizeBinary(3)),
+      field("fsl", new ArrowType.FixedSizeList(2),
+        field("item", new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE))),
+      field("dur", new ArrowType.Duration(TimeUnit.MICROSECOND)),
+      field("dates", ArrowType.List.INSTANCE, field("item", new ArrowType.Date(DateUnit.DAY))),
+      field("d64", new ArrowType.Date(DateUnit.MILLISECOND)),
+      field("t_s", new ArrowType.Time(TimeUnit.SECOND, 32)),
+      field("t_ms", new ArrowType.Time(TimeUnit.MILLISECOND, 32)),
+      field("t_ns", new ArrowType.Time(TimeUnit.NANOSECOND, 64)),
+      field("dec256", new ArrowType.Decimal(20, 2, 256)),
+      field("ivl", new ArrowType.Interval(IntervalUnit.DAY_TIME))).asJava)
+    val allocator = new org.apache.arrow.memory.RootAllocator()
+    val root = VectorSchemaRoot.create(schema, allocator)
+    val out = new java.io.ByteArrayOutputStream()
+    try {
+      root.allocateNew()
+      root.getVector("u8").asInstanceOf[UInt1Vector].setSafe(0, 255)
+      root.getVector("u64").asInstanceOf[UInt8Vector].setSafe(0, 42L)
+      root.getVector("ts_ns").asInstanceOf[TimeStampNanoVector].setSafe(0, 1705314605123456789L)
+      root.getVector("t_us").asInstanceOf[TimeMicroVector].setSafe(0, 37805123456L)
+      root.getVector("ls").asInstanceOf[LargeVarCharVector].setSafe(0, "héllo".getBytes("UTF-8"))
+      root.getVector("fsb").asInstanceOf[FixedSizeBinaryVector].setSafe(0, Array[Byte](1, 2, 3))
+      val fsl = root.getVector("fsl").asInstanceOf[FixedSizeListVector]
+      fsl.setNotNull(0)
+      val floats = fsl.getDataVector.asInstanceOf[Float4Vector]
+      floats.setSafe(0, 1.5f); floats.setSafe(1, 2.5f)
+      root.getVector("dur").asInstanceOf[DurationVector].setSafe(0, 90000000L)
+      val dates = root.getVector("dates").asInstanceOf[ListVector]
+      dates.startNewValue(0)
+      dates.getDataVector.asInstanceOf[DateDayVector].setSafe(0, 19737)
+      dates.endValue(0, 1)
+      root.getVector("d64").asInstanceOf[DateMilliVector].setSafe(0, 19737L * 86400000L)
+      root.getVector("t_s").asInstanceOf[TimeSecVector].setSafe(0, 37805)
+      root.getVector("t_ms").asInstanceOf[TimeMilliVector].setSafe(0, 37805123)
+      root.getVector("t_ns").asInstanceOf[TimeNanoVector].setSafe(0, 37805123456789L)
+      root.getVector("dec256").asInstanceOf[Decimal256Vector].setSafe(0, new java.math.BigDecimal("12345.67"))
+      root.getVector("ivl").asInstanceOf[IntervalDayVector].setSafe(0, 1, 500)
+      (0 until root.getFieldVectors.size).foreach(c => root.getVector(c).setNull(1))
+      root.setRowCount(2)
+      val writer = new org.apache.arrow.vector.ipc.ArrowStreamWriter(root, null, out)
+      writer.start(); writer.writeBatch(); writer.end(); writer.close()
+    } finally { root.close(); allocator.close() }
+    val back = ArrowIO.fromArrowStream(spark, out.toByteArray)
+    assert(back.schema.map(_.dataType) == Seq(ShortType, LongType, TimestampNTZType, TimestampNTZType,
+      StringType, BinaryType, ArrayType(FloatType), DayTimeIntervalType(), ArrayType(DateType),
+      DateType, TimestampNTZType, TimestampNTZType, TimestampNTZType, DecimalType(20, 2),
+      DayTimeIntervalType()))
+    val rows = back.collect()
+    val r = rows(0)
+    assert(r.getShort(0) == 255 && r.getLong(1) == 42L)
+    assert(r.get(2) == java.time.LocalDateTime.of(2024, 1, 15, 10, 30, 5, 123456000))
+    assert(r.get(3) == java.time.LocalDateTime.of(1970, 1, 1, 10, 30, 5, 123456000))
+    assert(r.getString(4) == "héllo")
+    assert(r.getAs[Array[Byte]](5).toSeq == Seq[Byte](1, 2, 3))
+    assert(r.getSeq[Float](6) == Seq(1.5f, 2.5f))
+    assert(r.get(7) == java.time.Duration.ofSeconds(90))
+    assert(r.getSeq[java.sql.Date](8) == Seq(java.sql.Date.valueOf("2024-01-15")))
+    assert(r.getDate(9) == java.sql.Date.valueOf("2024-01-15"))
+    assert(r.get(10) == java.time.LocalDateTime.of(1970, 1, 1, 10, 30, 5))
+    assert(r.get(11) == java.time.LocalDateTime.of(1970, 1, 1, 10, 30, 5, 123000000))
+    assert(r.get(12) == java.time.LocalDateTime.of(1970, 1, 1, 10, 30, 5, 123456000))
+    assert(r.getDecimal(13) == new java.math.BigDecimal("12345.67"))
+    assert(r.get(14) == java.time.Duration.ofDays(1).plusMillis(500))
+    assert((0 until 15).forall(rows(1).isNullAt))
   }
 }
