@@ -1,18 +1,19 @@
 package graft.engine
 
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.locks.ReentrantLock
 import org.apache.spark.sql.SparkSession
 
 /** Per-table commit serialization — in-process AND cross-process.
   *
-  * Every path that folds data into a base table — a transaction's
-  * COMMIT apply ([[TxnDml.commitApply]]), an autocommitted row-level DML
-  * statement ([[graft.sources.RowDml]]), or a plain non-transactional
-  * INSERT/COPY FROM — takes this lock for its target table(s) around the
-  * whole journal→publish→fold→drop window. That closes the lost-update race
+  * Every path that writes a base table takes this lock for its target
+  * table(s): a transaction's COMMIT ([[TxnDml.commitApply]]) and an
+  * autocommitted row-level DML statement ([[graft.sources.RowDml]]) around
+  * the whole [[TxnJournal.commit]] window, and a plain non-transactional
+  * INSERT/COPY FROM or an `/ingest` bulk load ([[graft.sources.Ingest]])
+  * around its write and row-count check. That closes the lost-update race
   * the r10 review flagged: without it, a non-transactional insert that runs
   * `unshadow` during another session's publish-to-fold window lands on the
   * base table and is then silently clobbered by the in-flight commit's fold.
@@ -48,17 +49,11 @@ object CommitLock {
   private def lockFor(table: String): ReentrantLock =
     locks.computeIfAbsent(table, _ => new ReentrantLock())
 
-  private def fenceDir(spark: SparkSession): java.nio.file.Path = {
-    val raw = spark.conf.get("spark.sql.warehouse.dir",
-      sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse")
-    Paths.get(raw.stripPrefix("file:")).resolve("_graft_locks")
-  }
-
   /** Blocking-acquire the cross-process fence for `table`; returns the open
     * channel whose close releases the OS lock.
     */
   private def acquireFence(spark: SparkSession, table: String): FileChannel = {
-    val dir = fenceDir(spark)
+    val dir = Warehouse.path(spark).resolve("_graft_locks")
     Files.createDirectories(dir)
     val ch = FileChannel.open(dir.resolve(s"$table.lock"),
       StandardOpenOption.CREATE, StandardOpenOption.WRITE)

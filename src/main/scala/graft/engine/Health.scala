@@ -88,7 +88,6 @@ final class ShutdownState(gracePeriodSeconds: Long = 30) {
   }
 
   def finishWork(): Unit = inFlight.decrementAndGet()
-  def inFlightCount: Int = inFlight.get()
 
   /** Drain completes when in-flight work hits zero (or grace expires). */
   def drained: Boolean = phase != Running && (inFlight.get() == 0 || graceExpired)

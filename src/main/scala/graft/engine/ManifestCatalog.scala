@@ -41,17 +41,11 @@ object ManifestCatalog {
 
   private val Header = "graft-manifest v1"
 
-  private def warehousePath(spark: SparkSession): Path = {
-    val raw = spark.conf.get("spark.sql.warehouse.dir",
-      sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse")
-    Paths.get(raw.stripPrefix("file:"))
-  }
-
   def manifestPath(spark: SparkSession): Path =
-    warehousePath(spark).resolve("_graft_manifest")
+    Warehouse.path(spark).resolve("_graft_manifest")
 
   private def tombstonePath(spark: SparkSession): Path =
-    warehousePath(spark).resolve("_graft_txn_tombstones")
+    Warehouse.path(spark).resolve("_graft_txn_tombstones")
 
   /** (version, table -> snapshot dir). Version 0 = no manifest. */
   def read(spark: SparkSession): (Long, Map[String, String]) = {
@@ -223,20 +217,12 @@ object ManifestCatalog {
       }
     reap.foreach { case (_, d) =>
       val dp = Paths.get(d.stripPrefix("file:"))
-      if (dp.startsWith(TxnJournal.stageRoot(spark))) deleteTree(dp)
+      if (dp.startsWith(TxnJournal.stageRoot(spark))) Warehouse.deleteTree(dp)
     }
     if (keep.isEmpty) Files.deleteIfExists(p)
     else Files.write(p, keep.map { case (ts, d) => s"$ts\t$d" }
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     reap.size
-  }
-
-  private def deleteTree(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.foreach(deleteTree)
-    Files.deleteIfExists(p)
-    ()
   }
 }

@@ -106,7 +106,6 @@ final class SessionState(
 
   def lookupPrepared(handle: String): Option[Prepared] = Option(prepared.get(handle))
   def closePrepared(handle: String): Boolean = prepared.remove(handle) != null
-  def preparedCount: Int = prepared.size()
 
   // ---- SQL-level PREPARE / EXECUTE / DEALLOCATE (DuckDB statement forms;
   // the wire RPCs above are the Flight face of the same machinery) ----

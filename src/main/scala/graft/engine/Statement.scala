@@ -744,12 +744,7 @@ object Statement {
       // generic path.
       guardOrThrow(session)(s"CREATE TABLE $table $rest")
       session.spark.sql(s"DROP TABLE IF EXISTS $table")
-      val replacedDir = new java.io.File(attachLocationOf(sessions, session, table).get)
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-        f.delete(): Unit
-      }
-      rmTree(replacedDir)
+      Warehouse.deleteTree(java.nio.file.Paths.get(attachLocationOf(sessions, session, table).get))
       create(sessions, session, global, s"CREATE TABLE $table $rest")
 
     case CreateOrReplaceTableRe(table, rest) =>

@@ -11,22 +11,20 @@ import scala.jdk.CollectionConverters._
   * points a session temp view of the same name at it — temp views shadow
   * catalog tables in resolution, so every later statement in the session
   * (reads and further DML alike) sees the transaction's own writes, while
-  * other sessions keep reading the committed table. COMMIT applies each
-  * touched table's final snapshot through the same INSERT OVERWRITE the
-  * non-transactional path uses and drops the shadows; ROLLBACK just drops
-  * the shadows — the table was never touched.
+  * other sessions keep reading the committed table. COMMIT drops the
+  * shadows and folds each touched table's final snapshot through
+  * [[TxnJournal.commit]], the one commit path an autocommitted statement
+  * also takes; ROLLBACK just drops the shadows — the table was never
+  * touched.
   *
-  * Guarantees, stated honestly: per-table atomicity (one INSERT OVERWRITE
-  * per table at commit), session-local read-your-writes isolation, full
-  * rollback, and CRASH atomicity across tables — COMMIT writes a
-  * write-ahead journal ([[TxnJournal]]) before touching any table, and
-  * bootstrap redoes an interrupted commit from it, so a crash mid-commit
-  * can never leave some tables applied and others not once the engine is
-  * back up. What remains non-atomic is in-flight VISIBILITY: a concurrent
-  * reader during the apply window can see table A new next to table B old
-  * (closing that needs a versioned catalog — Delta/Iceberg territory; see
-  * TxnJournal's scaladoc). Non-DML writes (INSERT, DDL, ingest) are
-  * rejected inside a transaction rather than silently applied eagerly.
+  * Guarantees: session-local read-your-writes isolation, full rollback,
+  * CRASH atomicity across tables (the write-ahead journal is written before
+  * any table is touched, and bootstrap redoes an interrupted commit from
+  * it) and VISIBILITY atomicity across default-db tables (one manifest
+  * rename publishes every post-image before any base is overwritten —
+  * [[ManifestCatalog]]; a reader that resolved a base before the publish
+  * can still list it mid-fold). Non-DML writes (INSERT, DDL, ingest) are rejected
+  * inside a transaction rather than silently applied eagerly.
   */
 object TxnDml {
 
@@ -108,53 +106,23 @@ object TxnDml {
     go(plan)
   }
 
-  /** Apply every touched table's final snapshot and drop the shadows.
-    * Returns the applied table names (first-touch order).
-    *
-    * Order of operations is the crash-atomicity protocol: journal first
-    * (fsync + atomic rename = the commit point), then the per-table
-    * overwrites, then journal deletion. A crash anywhere in the apply loop
-    * leaves the journal in place and [[TxnJournal.recover]] redoes the
-    * whole entry list at next bootstrap.
+  /** Commit the transaction: drop the shadows, then fold every touched
+    * table's final snapshot through [[TxnJournal.commit]] — the same
+    * journal → manifest publish → fold path an autocommitted statement
+    * takes — under the tables' [[CommitLock]]s, so a concurrent writer on
+    * any touched table waits out the fold instead of racing it. Returns the
+    * applied table names (first-touch order).
     */
   def commitApply(spark: SparkSession, txn: Transactions#Txn): Seq[String] = {
     val entries = txn.staged.synchronized { txn.staged.asScala.toSeq }
     if (entries.isEmpty) return Seq.empty
-    // Drop the shadows FIRST so insertInto resolves the catalog tables, not
+    // Drop the shadows FIRST so the fold resolves the catalog tables, not
     // the temp views (inserting into a view is an error).
     entries.foreach { case (name, _) => spark.catalog.dropTempView(shadowName(name)) }
-    // Per-table commit locks for the whole journal→fold→drop window: a
-    // concurrent writer on any touched table waits out the fold instead of
-    // racing it ([[CommitLock]]).
     CommitLock.withTables(spark, entries.map(_._1)) {
-    val journal = TxnJournal.write(spark, txn.id, entries)
-    // VISIBILITY point: one atomic manifest rename maps every touched table
-    // to its post-image BEFORE any base table is overwritten. Reader
-    // sessions resolve through the manifest (Statement path refresh), so
-    // they observe all of this commit or none of it — never table A new
-    // next to table B old ([[ManifestCatalog]]). Manifest entries use the
-    // bare spelling for default-db tables (shadow views are unqualified).
-    val manifestEntries = entries.map { case (n, d) => (TableNames.manifestName(n), d) }
-    ManifestCatalog.publish(spark, manifestEntries)
-    val applied = entries.map { case (name, dir) =>
-      TxnJournal.foldFull(spark, name, dir)
-      name
+      TxnJournal.commit(spark, txn.id, entries)()
     }
-    TxnJournal.clear(journal)
-    // Bases now equal snapshots — dropping the entries never changes what a
-    // fresh reader sees.
-    ManifestCatalog.drop(spark, manifestEntries)
-    // The staging dirs live under the WAREHOUSE (so crash redo can find
-    // them) — no tmpdir reaper will ever collect them, so an un-deleted
-    // post-image is a permanent per-transaction disk leak. Deletion is
-    // DEFERRED through tombstones rather than immediate: a reader that
-    // resolved a snapshot through the manifest just before the drop may
-    // still be scanning it. Each commit reaps tombstones older than the
-    // grace period, bounding the leak to grace-window churn.
-    ManifestCatalog.tombstone(spark, entries.map(_._2))
-    ManifestCatalog.reapTombstones(spark)
-    applied
-    }
+    entries.map(_._1)
   }
 
   /** Discard the transaction's shadows; the catalog tables were never

@@ -5,53 +5,44 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
-/** Write-ahead commit journal for multi-table transactions.
+/** Write-ahead commit journal and the one commit path of row-level DML.
   *
-  * The reference gets cross-table atomicity from DuckDB's single-file WAL
-  * (`/root/reference/src/duckdb/duckdb_server.cpp:1987-2014` rides the
-  * database's own transaction layer, and a crashed process replays the WAL
-  * on next open). A directory of plain Parquet tables has no shared WAL, so
-  * [[TxnDml.commitApply]] re-creates the recoverable half of that contract
-  * explicitly:
+  * The reference gets autocommit and multi-statement commits from one
+  * transaction layer with one WAL (its `src/duckdb/duckdb_server.cpp:1987-2014`,
+  * and a crashed process replays the WAL on next open). A directory of plain Parquet
+  * tables has no shared WAL, so [[commit]] re-creates that contract, and
+  * both an autocommitted statement ([[graft.sources.RowDml]]) and a
+  * BEGIN…COMMIT ([[TxnDml.commitApply]]) run through it:
   *
   *   1. every touched table's FULL post-image is already sitting in a
-  *      durable staging dir (written during the transaction, under the
-  *      warehouse so it survives a process restart);
-  *   2. COMMIT first writes ONE journal file listing (table -> staging dir),
-  *      fsync + atomic rename — the commit point;
-  *   3. then applies each table's overwrite and deletes the journal.
+  *      durable staging dir (under the warehouse, so it survives a process
+  *      restart);
+  *   2. ONE journal file lists (table -> staging dir), fsync + atomic
+  *      rename — the commit point;
+  *   3. ONE manifest rename maps every touched table to its post-image
+  *      ([[ManifestCatalog]]) — the visibility point: a reader sees all of
+  *      the commit or none of it;
+  *   4. each table's post-image is folded into its base, then the journal
+  *      is deleted, the manifest entries dropped and the staging dirs
+  *      tombstoned.
   *
   * Crash before (2): no journal, no table touched — the transaction never
-  * happened. Crash after (2), anywhere in (3): the journal survives, and
-  * [[recover]] (run at server bootstrap) REDOES every listed overwrite —
+  * happened. Crash after (2): the journal survives, and [[recover]] (run at
+  * server bootstrap) REDOES every listed fold with [[foldFull]] —
   * idempotent, because each entry is a full post-image — then clears the
-  * journal. Either way the commit is all-or-nothing across tables.
-  *
-  * What this does NOT buy (stated honestly, as TxnDml's scaladoc always
-  * has): in-flight visibility atomicity. A concurrent reader during window
-  * (3) can still see table A's new state next to table B's old one; closing
-  * that needs a versioned catalog that swaps all table pointers in one
-  * manifest rename (Delta/Iceberg territory — their commit protocol is this
-  * same journal with the read path routed through it). On object storage
-  * the atomic-rename step becomes a conditional PUT of the journal object;
-  * the protocol is otherwise unchanged at any scale, since the journal is
-  * O(touched tables) small regardless of data volume.
+  * journal. Either way the commit is all-or-nothing across tables. On
+  * object storage the atomic renames become conditional PUTs; the journal
+  * is O(touched tables) small regardless of data volume.
   */
 object TxnJournal {
 
   private val Header = "graft-txn-journal v1"
 
-  private def warehousePath(spark: SparkSession): Path = {
-    val raw = spark.conf.get("spark.sql.warehouse.dir",
-      sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse")
-    Paths.get(raw.stripPrefix("file:"))
-  }
-
   /** Journal directory — underscore-prefixed so no table resolution ever
     * mistakes it for data.
     */
   def journalDir(spark: SparkSession): Path =
-    warehousePath(spark).resolve("_graft_txn_journal")
+    Warehouse.path(spark).resolve("_graft_txn_journal")
 
   /** Durable staging root for transaction post-images. Lives beside the
     * tables (same filesystem / same store), so a post-restart redo can
@@ -59,7 +50,7 @@ object TxnJournal {
     * the crash the journal exists for.
     */
   def stageRoot(spark: SparkSession): Path =
-    warehousePath(spark).resolve("_graft_txn_stage")
+    Warehouse.path(spark).resolve("_graft_txn_stage")
 
   /** Write the commit journal for `txnId`: tmp file, fsync, atomic rename.
     * The rename is the commit point — a reader never observes a partial
@@ -86,11 +77,50 @@ object TxnJournal {
   /** Commit completed: the journal is obsolete. */
   def clear(journal: Path): Unit = { Files.deleteIfExists(journal); () }
 
+  /** Commit staged post-images: `entries` maps canonical table names
+    * ([[TableNames.canonical]]) to staging dirs. The caller holds the
+    * tables' [[CommitLock]]s. `fold` writes one post-image into its base;
+    * the autocommit path passes a partition-scoped fold for statements that
+    * touched only some partitions, everything else folds with [[foldFull]],
+    * the same fold crash redo uses.
+    */
+  def commit(spark: SparkSession, txnId: String, entries: Seq[(String, String)])(
+      fold: (String, String) => Unit = foldFull(spark, _, _)): Unit = {
+    val journal = write(spark, txnId, entries)
+    // Manifest entries carry the bare spelling for default-db tables
+    // (shadow views are unqualified — TableNames.manifestName).
+    val manifestEntries = entries.map { case (t, d) => (TableNames.manifestName(t), d) }
+    ManifestCatalog.publish(spark, manifestEntries)
+    // Crash-window widener for the kill -9 drills (DmlCrashSpec): holds the
+    // commit between the journal's redo point and the fold so an external
+    // kill lands INSIDE the window recovery must cover. Unset in
+    // production — a plain conf read, no behavior change.
+    spark.conf.getOption("spark.graft.dml.crashTestDelayMs")
+      .foreach(ms => Thread.sleep(ms.toLong))
+    entries.foreach { case (table, staged) =>
+      // Inside the commit lock a leftover shadow can only be a stale
+      // manifest view from an already-folded commit — drop it so the fold
+      // resolves the base table.
+      ManifestCatalog.unshadow(spark, table)
+      fold(table, staged)
+    }
+    clear(journal)
+    // Bases now equal snapshots — dropping the entries never changes what a
+    // fresh reader sees.
+    ManifestCatalog.drop(spark, manifestEntries)
+    // No tmpdir reaper ever collects the warehouse staging dirs, so deletion
+    // is DEFERRED through tombstones: a reader that resolved a snapshot
+    // through the manifest just before the drop may still be scanning it.
+    // Each commit reaps tombstones older than the grace period.
+    ManifestCatalog.tombstone(spark, entries.map(_._2))
+    ManifestCatalog.reapTombstones(spark)
+  }
+
   /** Fold a staged FULL post-image into its base table (static overwrite).
     * Columns are re-selected into the CATALOG table's order by name first:
-    * `insertInto` is positional, and a partition-structured snapshot (the
-    * autocommit DML path writes those) reads back with its partition
-    * columns LAST regardless of the table's declared order.
+    * `insertInto` is positional, and a partition-structured snapshot (a
+    * partition-scoped autocommit statement stages one) reads back with its
+    * partition columns LAST regardless of the table's declared order.
     */
   def foldFull(spark: SparkSession, table: String, staged: String): Unit = {
     val meta = spark.sessionState.catalog.getTableMetadata(
@@ -122,11 +152,7 @@ object TxnJournal {
         Files.move(part.toPath, locFile.toPath, StandardCopyOption.ATOMIC_MOVE,
           StandardCopyOption.REPLACE_EXISTING)
         spark.sql(s"REFRESH TABLE $table")
-      } finally {
-        Option(tmpDir.toFile.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-        Files.deleteIfExists(tmpDir)
-        ()
-      }
+      } finally Warehouse.deleteTree(tmpDir)
     } else aligned.write.mode("overwrite").insertInto(table)
   }
 
@@ -211,7 +237,7 @@ object TxnJournal {
     val p = Paths.get(dir.stripPrefix("file:"))
     // only ever delete under our own staging root — never follow a journal
     // entry outside it
-    if (p.startsWith(stageRoot(spark))) deleteTree(p)
+    if (p.startsWith(stageRoot(spark))) Warehouse.deleteTree(p)
   }
 
   /** Bootstrap-time orphan sweep: any dir under the staging root referenced
@@ -237,14 +263,6 @@ object TxnJournal {
     }
     Files.list(root).iterator().asScala
       .filter(d => !live.contains(d.toAbsolutePath.toString))
-      .foreach(deleteTree)
-  }
-
-  private def deleteTree(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.foreach(deleteTree)
-    Files.deleteIfExists(p)
-    ()
+      .foreach(Warehouse.deleteTree)
   }
 }

@@ -35,12 +35,6 @@ object Op {
     */
   def eager(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): Op =
     Op(name, run, Some(oracle), cacheable = false)
-
-  /** Operator whose semantics are not expressible in portable SQL
-    * (rows-only check by the driver; value-checked in our own ScalaTest).
-    */
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): Op =
-    Op(name, run, None)
 }
 
 /** Exact-decimal helpers for money-aggregation oracles.
@@ -61,7 +55,6 @@ object Money {
 
   /** Money column (|v| < 10^10, 2 decimals — lossless). */
   def dec2(name: String): Column = col(name).cast("decimal(12,2)")
-  def dec2c(c: Column): Column = c.cast("decimal(12,2)")
 
   /** Rate column (discount/tax: |v| < 10, 2 decimals — lossless). */
   def rate2(name: String): Column = col(name).cast("decimal(3,2)")

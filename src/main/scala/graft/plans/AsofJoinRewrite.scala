@@ -48,8 +48,6 @@ import org.apache.spark.sql.types.{StructField, StructType}
 object AsofJoinRewrite {
   import SqlScan._
 
-  def hasAsof(sql: String): Boolean = joinSites(sql).nonEmpty
-
   /** Top-level ASOF positions that are actually JOIN keywords: followed by
     * [LEFT] JOIN. A bare identifier spelled `asof` (SELECT t.asof FROM t) is
     * a column/alias reference, not a join, and must not trigger the rewrite.

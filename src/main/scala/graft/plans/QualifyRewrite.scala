@@ -62,8 +62,6 @@ object QualifyRewrite {
     out.result()
   }
 
-  def hasQualify(sql: String): Boolean = topLevel(sql, "QUALIFY").nonEmpty
-
   def rewrite(sql: String): String = {
     val qs = topLevel(sql, "QUALIFY")
     if (qs.isEmpty) return sql

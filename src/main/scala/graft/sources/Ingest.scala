@@ -65,29 +65,33 @@ object Ingest {
       return IngestResult(table, expected, created = true)
     }
 
-    val exists = tableExists(spark, table)
-    if (!exists) {
-      if (!createIfMissing)
-        throw new IllegalStateException(s"table $table does not exist and if_not_exist=FAIL")
-      val before = 0L
-      data.write.mode(SaveMode.ErrorIfExists).saveAsTable(table)
-      verifyCount(spark, table, before + expected)
-      IngestResult(table, expected, created = true)
-    } else ifExists match {
-      case IfExists.Fail =>
-        throw new IllegalStateException(s"table $table already exists and if_exists=FAIL")
-      case IfExists.Replace =>
-        spark.sql(s"DROP TABLE $table")
+    // The write and its count check hold the table's commit lock, like
+    // every other writer: an append can neither land inside a concurrent
+    // DML commit's publish-to-fold window (the fold would overwrite it) nor
+    // count rows another writer added.
+    graft.engine.CommitLock.withExclusiveWrite(spark, table) {
+      if (!tableExists(spark, table)) {
+        if (!createIfMissing)
+          throw new IllegalStateException(s"table $table does not exist and if_not_exist=FAIL")
         data.write.mode(SaveMode.ErrorIfExists).saveAsTable(table)
         verifyCount(spark, table, expected)
         IngestResult(table, expected, created = true)
-      case IfExists.Append | IfExists.Unspecified =>
-        val before = spark.table(table).count()
-        val aligned =
-          if (ifExists == IfExists.Append) alignByName(data, spark.table(table)) else data
-        aligned.write.mode(SaveMode.Append).saveAsTable(table)
-        verifyCount(spark, table, before + expected)
-        IngestResult(table, expected, created = false)
+      } else ifExists match {
+        case IfExists.Fail =>
+          throw new IllegalStateException(s"table $table already exists and if_exists=FAIL")
+        case IfExists.Replace =>
+          spark.sql(s"DROP TABLE $table")
+          data.write.mode(SaveMode.ErrorIfExists).saveAsTable(table)
+          verifyCount(spark, table, expected)
+          IngestResult(table, expected, created = true)
+        case IfExists.Append | IfExists.Unspecified =>
+          val before = spark.table(table).count()
+          val aligned =
+            if (ifExists == IfExists.Append) alignByName(data, spark.table(table)) else data
+          aligned.write.mode(SaveMode.Append).saveAsTable(table)
+          verifyCount(spark, table, before + expected)
+          IngestResult(table, expected, created = false)
+      }
     }
   } finally graft.engine.PlanCache.bump()
 

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *   unpartitioned tables rewrite fully.
   *
   * A bare (non-BEGIN) statement is an IMPLICIT ONE-STATEMENT TRANSACTION:
-  * the default [[rewrite]] sink stages the post-image durably, journals,
-  * publishes a manifest entry, then folds — kill -9 at any point leaves the
+  * the default [[rewrite]] sink stages the post-image durably and commits it
+  * through [[graft.engine.TxnJournal.commit]], the one journal → manifest
+  * publish → fold path BEGIN…COMMIT uses — kill -9 at any point leaves the
   * table readable at exactly the pre- or post-image (reference autocommit:
   * `/root/reference/src/duckdb/duckdb_server.cpp:1987-2014`), and the whole
   * statement holds the table's commit lock so concurrent writers serialize.
@@ -75,13 +76,6 @@ object RowDml {
     */
   type Sink = (SparkSession, String, DataFrame, Boolean) => Unit
 
-  /** Execute a row-level DML statement; returns a one-row `affected` count
-    * DataFrame (the reference's update-statement result shape).
-    *
-    * `allowPartitionScope = false` forces full-table frames through the
-    * sink — staging sinks need the complete post-image, not just the
-    * affected partitions.
-    */
   /** DML target table name (qualified as written), or None when `sql` is
     * not row-level DML / unparseable — the engine's read-only-attachment
     * gate needs the target before execution.
@@ -94,6 +88,13 @@ object RowDml {
       case _ => None
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Execute a row-level DML statement; returns a one-row `affected` count
+    * DataFrame (the reference's update-statement result shape).
+    *
+    * `allowPartitionScope = false` forces full-table frames through the
+    * sink — staging sinks need the complete post-image, not just the
+    * affected partitions.
+    */
   def execute(spark: SparkSession, sql: String,
       sink: Sink = rewrite, allowPartitionScope: Boolean = true,
       // Pre-image resolution: inside a transaction the engine passes
@@ -163,7 +164,7 @@ object RowDml {
     * excluded`) — built directly over the parsed plan, no re-render.
     */
   private def sourceOf(spark: SparkSession, plan: LogicalPlan,
-      resolve: (SparkSession, String) => DataFrame = (s, n) => s.table(n)): (org.apache.spark.sql.DataFrame, String) =
+      resolve: (SparkSession, String) => DataFrame): (DataFrame, String) =
     plan match {
       case SubqueryAlias(id, r: UnresolvedRelation) =>
         (resolve(spark, r.multipartIdentifier.mkString(".")), id.name)
@@ -220,33 +221,27 @@ object RowDml {
     } catch { case _: Exception => Seq.empty }
 
   /** Autocommitted copy-on-write rewrite — an implicit one-statement
-    * transaction riding the same journal + manifest protocol as
-    * BEGIN…COMMIT ([[graft.engine.TxnDml.commitApply]]):
+    * transaction. What is its own is the staging; the commit runs through
+    * [[graft.engine.TxnJournal.commit]], the one journal → manifest publish
+    * → fold path BEGIN…COMMIT takes too (the reference's autocommit,
+    * `src/duckdb/duckdb_server.cpp:1987-2014`): kill -9
+    * anywhere leaves the table readable at exactly its pre- or post-image.
     *
-    *   1. stage a durable FULL post-image snapshot under the warehouse
-    *      (a table cannot be read and overwritten in one plan anyway, so
-    *      the statement was always paying this write);
-    *   2. write the commit journal (fsync + atomic rename — the redo
-    *      point: kill -9 anywhere after this and bootstrap recovery folds
-    *      the post-image; before it, the base was never touched — the
-    *      table is always readable at pre- OR post-image, never partial);
-    *   3. publish the manifest entry (the visibility point for readers);
-    *   4. fold into the base, clear the journal, drop the entry, tombstone
-    *      the snapshot. Reference autocommit semantics:
-    *      `/root/reference/src/duckdb/duckdb_server.cpp:1987-2014`.
-    *
-    * Partition-scoped statements stay partition-scoped at every data-sized
-    * step: the snapshot WRITES only the affected partitions and composes
-    * the full post-image by HARDLINKING the unaffected base partition dirs
-    * (O(partitions) metadata, zero data movement — the same trick a
-    * lakehouse manifest plays with file pointers), and the fold reads back
-    * only the written partitions under dynamic partition overwrite, leaving
-    * every other partition's files byte-identical. Only the crash-redo path
-    * pays a full fold, and only after an actual crash.
+    * The staged snapshot is durable, under the warehouse (a table cannot be
+    * read and overwritten in one plan anyway, so the statement was always
+    * paying this write). Partition-scoped statements stay partition-scoped
+    * at every data-sized step: the snapshot WRITES only the affected
+    * partitions and composes the full post-image by HARDLINKING the
+    * unaffected base partition dirs (O(partitions) metadata, zero data
+    * movement — the same trick a lakehouse manifest plays with file
+    * pointers), and their fold reads back only the written partitions under
+    * dynamic partition overwrite, leaving every other partition's files
+    * byte-identical. Every other statement folds with
+    * [[graft.engine.TxnJournal.foldFull]], as crash redo does.
     */
   private def rewrite(spark: SparkSession, name: String, newRows: DataFrame,
       partitionScoped: Boolean): Unit = {
-    import graft.engine.{ManifestCatalog, TxnJournal}
+    import graft.engine.{TxnJournal, Warehouse}
     val meta = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(name))
     val cols = meta.schema.fieldNames
@@ -257,33 +252,20 @@ object RowDml {
     val aligned = newRows.select(cols.map(col).toIndexedSeq: _*)
     if (scoped) aligned.write.partitionBy(parts: _*).parquet(stage.toString)
     else aligned.write.parquet(stage.toString)
-    val affectedLeaves = if (scoped) leafPartitionDirs(stage, parts.length) else Nil
-    if (scoped && affectedLeaves.isEmpty) {
-      // zero affected partitions — post-image == pre-image, nothing to fold
-      deleteTree(stage)
+    val entries = Seq(name -> stage.toString)
+    val txnId = s"auto-${java.util.UUID.randomUUID()}"
+    if (!scoped) {
+      TxnJournal.commit(spark, txnId, entries)()
       return
     }
-    if (scoped)
-      linkUnaffectedPartitions(
-        java.nio.file.Paths.get(meta.location), stage, parts.length, affectedLeaves.toSet)
-    // Journal entries carry the canonical name (recover folds by catalog
-    // identifier); manifest entries carry the bare default-db spelling
-    // (shadow views are unqualified — TableNames.manifestName).
-    val entries = Seq(name -> stage.toString)
-    val manifestEntries = Seq(graft.engine.TableNames.manifestName(name) -> stage.toString)
-    val journal = TxnJournal.write(spark,
-      s"auto-${java.util.UUID.randomUUID()}", entries)
-    ManifestCatalog.publish(spark, manifestEntries)
-    // Crash-window widener for the kill -9 drill (DmlCrashSpec): holds the
-    // statement between the journal's redo point and the fold so an
-    // external kill lands INSIDE the window recovery must cover. Unset in
-    // production — a plain conf read, no behavior change.
-    spark.conf.getOption("spark.graft.dml.crashTestDelayMs")
-      .foreach(ms => Thread.sleep(ms.toLong))
-    // Inside our commit lock a leftover shadow can only be a stale manifest
-    // view from an already-folded commit — drop it so insertInto resolves
-    // the base table.
-    ManifestCatalog.unshadow(spark, name)
+    val affectedLeaves = leafPartitionDirs(stage, parts.length)
+    if (affectedLeaves.isEmpty) {
+      // zero affected partitions — post-image == pre-image, nothing to fold
+      Warehouse.deleteTree(stage)
+      return
+    }
+    linkUnaffectedPartitions(
+      java.nio.file.Paths.get(meta.location), stage, parts.length, affectedLeaves.toSet)
     // The scoped fold needs partitionOverwriteMode=dynamic, but toggling the
     // SESSION conf races: the per-table CommitLock does not serialize DMLs
     // on DIFFERENT tables, so another table's finally-restore could unset
@@ -296,7 +278,7 @@ object RowDml {
     // an isolated SQLConf, so the dynamic mode is visible to exactly this
     // one write. (DML targets are always catalog tables — insertInto
     // rejects temp views — so the clone resolves `name` identically.)
-    if (scoped) {
+    TxnJournal.commit(spark, txnId, entries) { (_, _) =>
       val fold = spark.newSession()
       fold.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       fold.read.option("basePath", stage.toString)
@@ -306,15 +288,7 @@ object RowDml {
       // the clone's insert refreshed ITS relation cache; drop the caller
       // session's stale FileIndex too
       spark.catalog.refreshTable(name)
-    } else {
-      spark.read.parquet(stage.toString)
-        .select(cols.map(col).toIndexedSeq: _*)
-        .write.mode("overwrite").insertInto(name)
     }
-    TxnJournal.clear(journal)
-    ManifestCatalog.drop(spark, manifestEntries)
-    ManifestCatalog.tombstone(spark, Seq(stage.toString))
-    ManifestCatalog.reapTombstones(spark)
   }
 
   /** Relative paths of the leaf partition dirs (depth = partition columns)
@@ -365,17 +339,6 @@ object RowDml {
     }
   }
 
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (!java.nio.file.Files.exists(p)) return
-    if (java.nio.file.Files.isDirectory(p)) {
-      val s = java.nio.file.Files.list(p)
-      try s.iterator().asScala.toSeq.foreach(deleteTree) finally s.close()
-    }
-    java.nio.file.Files.deleteIfExists(p)
-    ()
-  }
-
   private def affectedResult(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     Seq(n).toDF("affected")
@@ -386,8 +349,8 @@ object RowDml {
   private def update(spark: SparkSession, name: String, alias: String,
       assignments: Seq[Assignment], condition: Option[Expression],
       sink: Sink, allowPartitionScope: Boolean,
-      returning: Option[Seq[String]] = None,
-      resolve: (SparkSession, String) => DataFrame = (s, n) => s.table(n)): DataFrame = {
+      returning: Option[Seq[String]],
+      resolve: (SparkSession, String) => DataFrame): DataFrame = {
     val df = resolve(spark, name).alias(alias)
     val cond = coalesce(condition.map(exprCol).getOrElse(lit(true)).cast("boolean"), lit(false))
     val affected = df.filter(cond).count()
@@ -436,8 +399,8 @@ object RowDml {
   private def delete(spark: SparkSession, name: String, alias: String,
       condition: Option[Expression],
       sink: Sink, allowPartitionScope: Boolean,
-      returning: Option[Seq[String]] = None,
-      resolve: (SparkSession, String) => DataFrame = (s, n) => s.table(n)): DataFrame = {
+      returning: Option[Seq[String]],
+      resolve: (SparkSession, String) => DataFrame): DataFrame = {
     val df = resolve(spark, name).alias(alias)
     val cond = coalesce(condition.map(exprCol).getOrElse(lit(true)).cast("boolean"), lit(false))
     val affected = df.filter(cond).count()
@@ -470,8 +433,8 @@ object RowDml {
   private val Tid = "__graft_merge_tid"
 
   private def merge(spark: SparkSession, m: MergeIntoTable, sink: Sink,
-      returning: Option[Seq[String]] = None,
-      resolve: (SparkSession, String) => DataFrame = (s, n) => s.table(n)): DataFrame = {
+      returning: Option[Seq[String]],
+      resolve: (SparkSession, String) => DataFrame): DataFrame = {
     val (tRaw, tAlias) = relationOf(m.targetTable)
     val tName = graft.engine.TableNames.canonical(spark, tRaw)
     val (sDf, sAlias) = sourceOf(spark, m.sourceTable, resolve)

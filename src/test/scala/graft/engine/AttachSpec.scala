@@ -243,6 +243,32 @@ class AttachSpec extends AnyFunSuite {
     assert(run(admin, "SELECT COUNT(*) AS n FROM lake.upd_t").collect()(0).getLong(0) == 2)
   }
 
+  test("writable attach: autocommit UPDATE on a single-file table folds " +
+      "like COMMIT — the path stays one file") {
+    // a directory holding one plain parquet FILE (not a Spark output dir)
+    val dir = java.nio.file.Files.createTempDirectory("graft-attach-file")
+    val src = java.nio.file.Files.createTempDirectory("graft-attach-file-src")
+    spark.range(1, 6).selectExpr("CAST(id AS INT) AS id", "CAST(id * 10 AS INT) AS v")
+      .coalesce(1).write.mode("overwrite").parquet(src.toString)
+    val part = src.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+    val fa = dir.resolve("fa.parquet").toFile
+    java.nio.file.Files.move(part.toPath, fa.toPath)
+    Warehouse.deleteTree(src)
+    def rows() = run(admin, "SELECT id, v FROM filelake.fa ORDER BY id").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq
+    run(admin, s"ATTACH '$dir' AS filelake (READ_WRITE)")
+    try {
+      run(admin, "UPDATE filelake.fa SET v = v + 1 WHERE id <= 2")
+      assert(fa.isFile, s"$fa is no longer a regular file after the fold")
+      assert(run(admin, "SELECT SUM(v) AS s FROM filelake.fa").collect()(0).getLong(0) == 152)
+      val after = rows()
+      run(admin, "DETACH filelake")
+      run(admin, s"ATTACH '$dir' AS filelake (READ_WRITE)")
+      assert(rows() == after)
+      assert(after == Seq((1, 11), (2, 21), (3, 30), (4, 40), (5, 50)))
+    } finally run(admin, "DETACH filelake")
+  }
+
   test("writable attach: transactional DML — read-your-writes inside the " +
       "txn, isolation outside, COMMIT publishes, ROLLBACK discards") {
     attachedLake

@@ -333,18 +333,27 @@ class PlanCacheSpec extends AnyFunSuite {
   }
 
   test("count path returns the same value as count() and re-executes full work per call") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
     val s = spark.newSession()
     graft.Tables.ensure(s, graft.SparkTestHarness.sfDir)
     val q = "SELECT o_orderpriority, COUNT(*) AS c FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY o_orderpriority"
     val expected = s.sql(q).count()
+    // Only stages of jobs started under this case's own job group count: the
+    // context is shared with every other suite, and their stragglers must
+    // not land in the window.
+    val group = s"count-path-${java.util.UUID.randomUUID()}"
+    val ourStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(id => ourStages.add(id))
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet(): Unit
+        if (ourStages.contains(e.stageInfo.stageId)) stages.incrementAndGet(): Unit
     }
     def measured(body: => Long): (Long, Int) = {
       s.sparkContext.addSparkListener(listener)
+      s.sparkContext.setJobGroup(group, "count path")
       stages.set(0)
       try {
         val v = body
@@ -357,7 +366,10 @@ class PlanCacheSpec extends AnyFunSuite {
           if (now == last) same += 1 else { same = 0; last = now }
         }
         (v, stages.get)
-      } finally s.sparkContext.removeSparkListener(listener)
+      } finally {
+        s.sparkContext.clearJobGroup()
+        s.sparkContext.removeSparkListener(listener)
+      }
     }
     val (v1, stages1) = measured(PlanCache.count(s, "cnt:test")(s.sql(q)))
     val (v2, stages2) = measured(PlanCache.count(s, "cnt:test")(s.sql(q)))
@@ -366,9 +378,9 @@ class PlanCacheSpec extends AnyFunSuite {
     // second call must run the SAME stages, not skip map stages via shuffle
     // output reuse (that would make the repeated-action path elide work).
     assert(stages1 > 0)
-    // the context is shared with every other suite — a stray background
-    // stage (async listener stragglers, daemon flushes) can pollute one
-    // window; a mismatch gets ONE clean re-measurement before failing
+    // listener events are async and the quiet-poll window can close before
+    // a lagging bus delivers the last stage; a mismatch gets ONE clean
+    // re-measurement before failing
     val stages2Final =
       if (stages2 == stages1) stages2
       else measured(PlanCache.count(s, "cnt:test")(s.sql(q)))._2

@@ -361,6 +361,33 @@ class DmlSpec extends AnyFunSuite {
       "6 serialized increments must all land — the commit lock forbids lost updates")
   }
 
+  test("an ingest append waits out a concurrent DML commit instead of being folded away") {
+    import spark.implicits._
+    freshTable("dml_ing")
+    (1 to 10).map(i => (i, i.toDouble)).toDF("id", "v").write.saveAsTable("dml_ing")
+    // Session A's DELETE holds its commit open for 4 s between the manifest
+    // publish and the fold; session B ingests into that window.
+    val a = spark.newSession()
+    a.conf.set("spark.graft.dml.crashTestDelayMs", "4000")
+    val b = spark.newSession()
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val deleter = new Thread(() =>
+      try RowDml.execute(a, "DELETE FROM dml_ing WHERE id = 1").collect(): Unit
+      catch { case t: Throwable => failure.set(t) })
+    deleter.start()
+    val deadline = System.currentTimeMillis() + 60000
+    while (!graft.engine.ManifestCatalog.read(spark)._2.contains("dml_ing") &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20)
+    val res = Ingest.ingest(b,
+      b.range(11, 16).selectExpr("CAST(id AS INT) AS id", "CAST(id AS DOUBLE) AS v"),
+      "dml_ing", Ingest.IfExists.Append)
+    deleter.join(120000)
+    assert(failure.get == null, s"DELETE failed: ${failure.get}")
+    assert(res.rowsIngested == 5)
+    assert(spark.table("dml_ing").count() == 14,
+      "9 rows survive the DELETE and all 5 ingested rows must land after its fold")
+  }
+
   test("a non-transactional write refuses to race a foreign unfolded manifest entry") {
     import spark.implicits._
     import graft.engine.{CommitLock, ManifestCatalog}
